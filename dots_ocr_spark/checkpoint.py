@@ -103,7 +103,8 @@ def run_extraction(
     100 TB with fine-grained commits (measured: each extra group adds a
     source scan, BENCH/BASELINE.md). The column MUST follow the pmod
     rule above — the resume domain, output partitioning, and lineage
-    are all keyed on it.
+    are all keyed on it; a value outside ``[0, n_buckets)`` or a commit
+    group holding a doc of another bucket raises ``ValueError``.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -111,7 +112,21 @@ def run_extraction(
     done = completed_buckets(spark, base)
     todo = [b for b in range(n_buckets) if b not in done]
 
-    if bucket_col is None:
+    if bucket_col is not None:
+        # Domain guard: a doc whose bucket_col lies outside
+        # [0, n_buckets) is in no commit group, so it would never be
+        # selected — silently dropped while every group commits (e.g. an
+        # input laid out with 2*n_buckets, which the per-group guard
+        # below cannot see). A partition predicate: on a correct layout
+        # every partition is pruned and no data file is read.
+        c = F.col(bucket_col)
+        if not docs.where(c.isNull() | (c < 0) | (c >= n_buckets)).isEmpty():
+            raise ValueError(
+                f"bucket_col={bucket_col!r} holds values outside "
+                f"[0, {n_buckets}): those docs belong to no commit group "
+                "and would be silently dropped. The input's partition "
+                "layout disagrees with this run's n_buckets.")
+    else:
         bucketed = docs.withColumn(
             "bucket",
             F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
@@ -287,7 +302,6 @@ def run_extraction_paged(
     n_buckets: int = 64,
     pages_per_range: int = 8,
     units_per_commit: int = 16,
-    shuffle_pages: bool = True,
     run_id: str | None = None,
 ) -> dict:
     """Run (or resume) a page-granular checkpointed parse over ``docs``.
@@ -349,8 +363,7 @@ def run_extraction_paged(
         group = todo[lo:lo + units_per_commit]
         sel = pages.where(
             unit_key.isin([b * _PR_ENC + p for b, p in group]))
-        parsed = pipeline.parse_pages_exploded(
-            sel.drop("bucket", "prange"), shuffle_pages=shuffle_pages)
+        parsed = pipeline.parse_pages_exploded(sel.drop("bucket", "prange"))
         out = parsed.withColumn(
             "bucket",
             F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"),

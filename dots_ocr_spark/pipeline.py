@@ -1,7 +1,7 @@
 """The Spark extraction job: interleaved document table in, ordered span
 table out.
 
-Three physical strategies, all span-sequence-equal to the oracle
+Two physical strategies, both span-sequence-equal to the oracle
 (tests/test_golden_e2e.py parametrizes the mode):
 
   * ``extract_fused`` (default, mode='fused') — document grain, ZERO
@@ -11,16 +11,15 @@ Three physical strategies, all span-sequence-equal to the oracle
     scan → mapInPandas → sink. Parallelism/balance come from input split
     sizing (``spark.sql.files.maxPartitionBytes``): documents are ~KBs,
     so every split holds thousands of docs and per-doc skew averages
-    out. Measured 0.875 scaling efficiency N→4N (BENCH/BASELINE.md).
-  * ``extract_paged`` (mode='paged') — page grain, ONE shuffle (hash by
-    doc_id + sortWithinPartitions); the UDF reassembles documents with a
-    group-carry across Arrow batches. For inputs that arrive at page
-    grain.
+    out. Throughput and layer costs on a 4-core host:
+    perfbench/BASELINE.md.
   * ``extract_scatter`` (mode='scatter') — page-scatter repartition by
     ``hash(doc_id, page_no)`` + JVM reassembly
     (``array_sort(collect_list(...))`` + higher-order functions). TWO
     shuffles, but page-level parallelism: for corpora whose largest
     documents are big enough to straggle a whole task (X7 skew note).
+
+Both Python workers run every page through one call, ``_parse_page``.
 
 The reference's analog of the Arrow batching here is its hand-rolled
 micro-batch collector (task_executor_pool.py:84-142); its analog of the
@@ -43,78 +42,79 @@ from .spec.page import process_page
 TASK_FAIL_THRESHOLD = 0.1
 
 
+def _parse_page(doc_id: str, page) -> dict:
+    """The one per-page call of both workers: decode the page's JSON side
+    layers and run the shared spec rules. ``page`` maps the PAGE field
+    names to values; a page frame without a ``words_json`` column parses
+    as if every page had no word layer."""
+    toc_json, words_json = page["toc_json"], page.get("words_json")
+    sf = page["scale_factor"]
+    return process_page(
+        page["payload"], int(page["width"]), int(page["height"]),
+        doc_id=doc_id, page_no=int(page["page_no"]),
+        scale_factor=float(sf) if sf is not None else 1.0,
+        toc=None if toc_json is None else json.loads(toc_json),
+        words=None if words_json is None else json.loads(words_json),
+    )
+
+
 # --------------------------------------------------------------------------
 # stage 1 — page parse (the only Python stage)
 # --------------------------------------------------------------------------
+
+_PARSED_COLS = tuple(f.name for f in schemas.PARSED_PAGE.fields)
+
 
 def _parse_pages_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas worker: page rows in, parsed page rows out.
 
     Arrow delivers columnar batches; the per-page loop below is the
     page-granular compute the reference runs per task (ocr_task.py:518-634),
-    here amortized over a whole Arrow batch per Python call.
+    here amortized over a whole Arrow batch per Python call. A row with a
+    null ``page_no`` is a document without pages (``explode_outer``); it
+    passes through unparsed so assembly still emits the document.
     """
     for pdf in batches:
-        doc_ids = pdf["doc_id"].tolist()
-        page_nos = pdf["page_no"].tolist()
-        widths = pdf["width"].tolist()
-        heights = pdf["height"].tolist()
-        scales = pdf["scale_factor"].tolist()
-        payloads = pdf["payload"].tolist()
-        tocs = pdf["toc_json"].tolist()
-        words_col = (pdf["words_json"].tolist() if "words_json" in pdf.columns
-                     else [None] * len(doc_ids))
-
-        out = {k: [] for k in
-               ("doc_id", "page_no", "status", "md", "md_nohf", "spans", "n_cells")}
-        for doc_id, page_no, w, h, sf, payload, toc_json, words_json in zip(
-                doc_ids, page_nos, widths, heights, scales, payloads, tocs,
-                words_col):
-            toc = None if toc_json is None else json.loads(toc_json)
-            words = None if words_json is None else json.loads(words_json)
-            r = process_page(
-                payload, int(w), int(h), doc_id=doc_id, page_no=int(page_no),
-                scale_factor=float(sf) if sf is not None else 1.0, toc=toc,
-                words=words,
-            )
-            out["doc_id"].append(doc_id)
-            out["page_no"].append(int(page_no))
-            out["status"].append(r["status"])
-            out["md"].append(r["md"])
-            out["md_nohf"].append(r["md_nohf"])
-            out["spans"].append(
-                [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]]
-            )
-            out["n_cells"].append(len(r["cells"]))
-        yield pd.DataFrame(out)
+        out: list[tuple] = []
+        cols = list(pdf.columns)
+        for values in zip(*(pdf[c].tolist() for c in cols)):
+            page = dict(zip(cols, values))
+            doc_id = page["doc_id"]
+            if pd.isna(page["page_no"]):
+                out.append((doc_id, None, None, None, None, None, None))
+                continue
+            r = _parse_page(doc_id, page)
+            out.append((
+                doc_id, int(page["page_no"]), r["status"], r["md"], r["md_nohf"],
+                [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]],
+                len(r["cells"]),
+            ))
+        yield pd.DataFrame(out, columns=_PARSED_COLS)
 
 
-def parse_pages(docs: DataFrame, shuffle_pages: bool = True) -> DataFrame:
+def parse_pages(docs: DataFrame) -> DataFrame:
     """Stage 1: explode documents to page grain and run the parse UDF.
-
-    ``shuffle_pages=True`` adds the skew-breaking repartition by
-    ``hash(doc_id, page_no)``; leave it on for real runs, off for tiny
-    unit-test inputs where the extra shuffle dominates.
-    """
+    ``explode_outer`` keeps a document with no (or null) pages as one
+    null-page row."""
     pages = docs.select(
-        "doc_id", F.explode("pages").alias("page")
+        "doc_id", F.explode_outer("pages").alias("page")
     ).select("doc_id", "page.*")
-    return parse_pages_exploded(pages, shuffle_pages=shuffle_pages)
+    return parse_pages_exploded(pages)
 
 
-def parse_pages_exploded(pages: DataFrame, shuffle_pages: bool = True) -> DataFrame:
+def parse_pages_exploded(pages: DataFrame) -> DataFrame:
     """Parse an already page-grain frame (doc_id + the PAGE columns) —
     the seam shared by ``parse_pages`` and the page-granular checkpoint
     runner (``checkpoint.run_extraction_paged``)."""
-    if shuffle_pages:
-        # Explicit partition count: an expression-only repartition is an
-        # AQE-coalescible exchange, and page batches are small enough
-        # (~8 MB) that AQE's 64 MB advisory size would collapse the Python
-        # stage to a handful of tasks — starving the executors where the
-        # work actually is. The count pins parallelism; pages stay
-        # scattered by hash so table/formula-heavy docs can't clump (X7).
-        n_part = pages.sparkSession.sparkContext.defaultParallelism * 4
-        pages = pages.repartition(n_part, F.xxhash64("doc_id", "page_no"))
+    # Skew-breaking scatter by hash(doc_id, page_no), with an explicit
+    # partition count: an expression-only repartition is an
+    # AQE-coalescible exchange, and page batches are small enough
+    # (~8 MB) that AQE's 64 MB advisory size would collapse the Python
+    # stage to a handful of tasks — starving the executors where the
+    # work actually is. The count pins parallelism; pages stay
+    # scattered by hash so table/formula-heavy docs can't clump (X7).
+    n_part = pages.sparkSession.sparkContext.defaultParallelism * 4
+    pages = pages.repartition(n_part, F.xxhash64("doc_id", "page_no"))
     return pages.mapInPandas(_parse_pages_batches, schema=schemas.PARSED_PAGE)
 
 
@@ -128,10 +128,12 @@ def assemble_documents(parsed: DataFrame) -> DataFrame:
     Mirrors the reference combiner (dotsocr_service.py:430-515): pages
     sorted by page_no; failed pages excluded; page markdown joined with a
     trailing ``\\n\\n`` per page; document failed when failed/total > 0.1.
+    A null-page row (a document without pages) contributes no page.
     """
+    page = F.struct("page_no", "status", "md", "md_nohf", "spans")
     grouped = parsed.groupBy("doc_id").agg(
         F.array_sort(
-            F.collect_list(F.struct("page_no", "status", "md", "md_nohf", "spans"))
+            F.collect_list(F.when(F.col("page_no").isNotNull(), page))
         ).alias("pr")
     )
 
@@ -170,8 +172,9 @@ def assemble_documents(parsed: DataFrame) -> DataFrame:
         "n_failed",
         "n_fallback",
         F.size(spans).alias("n_spans"),
+        # try_divide: a document without pages is "ok", as in the oracle
         F.when(
-            F.col("n_failed") / F.col("n_pages") > TASK_FAIL_THRESHOLD, F.lit("failed")
+            F.try_divide("n_failed", "n_pages") > TASK_FAIL_THRESHOLD, F.lit("failed")
         ).otherwise(F.lit("ok")).alias("status"),
     )
 
@@ -202,20 +205,10 @@ def _extract_doc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     for pdf in batches:
         out: list[tuple] = []
         for doc_id, pages in zip(pdf["doc_id"].tolist(), pdf["pages"].tolist()):
-            page_results = []
-            for p in sorted(pages if pages is not None else [],
-                            key=lambda p: p["page_no"]):
-                toc_json = p["toc_json"]
-                toc = None if toc_json is None else json.loads(toc_json)
-                words_json = p.get("words_json")
-                words = None if words_json is None else json.loads(words_json)
-                sf = p["scale_factor"]
-                page_results.append(process_page(
-                    p["payload"], int(p["width"]), int(p["height"]),
-                    doc_id=doc_id, page_no=int(p["page_no"]),
-                    scale_factor=float(sf) if sf is not None else 1.0, toc=toc,
-                    words=words,
-                ))
+            page_results = [
+                _parse_page(doc_id, p)
+                for p in sorted(pages if pages is not None else [],
+                                key=lambda p: p["page_no"])]
             out.append(_out_row(assemble_page_results(doc_id, page_results)))
         yield pd.DataFrame(out, columns=_OUT_COLS)
 
@@ -230,111 +223,31 @@ def extract_fused(docs: DataFrame) -> DataFrame:
     (``spark.sql.files.maxPartitionBytes``; docs are ~KBs, so every split
     holds thousands of documents and skew averages out). Per-task skew is
     bounded by the largest single document; for corpora with pathological
-    page counts per doc, use ``extract_paged``/``extract_scatter`` which
-    redistribute at page grain.
+    page counts per doc, use ``extract_scatter``, which redistributes at
+    page grain.
     """
     return docs.select("doc_id", "pages").mapInPandas(
         _extract_doc_batches, schema=schemas.OUTPUT)
 
 
-# --------------------------------------------------------------------------
-# fused parse+assemble, page grain (one shuffle — for page-grain inputs)
-# --------------------------------------------------------------------------
-
-def _parse_assemble_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for the page-grain fused path.
-
-    Rows arrive hash-partitioned by ``doc_id`` and sorted by
-    ``(doc_id, page_no)`` within the partition, so all pages of a document
-    are contiguous. Arrow batch boundaries do NOT align with documents, so
-    the open group is carried across batches and the final group flushed
-    at iterator exhaustion.
-    """
-    from .spec.assemble import assemble_page_results
-
-    cols, _row = _OUT_COLS, _out_row
-
-    cur_id: str | None = None
-    cur_results: list[dict] = []
-    for pdf in batches:
-        out: list[tuple] = []
-        words_col = (pdf["words_json"].tolist() if "words_json" in pdf.columns
-                     else [None] * len(pdf))
-        for doc_id, page_no, w, h, sf, payload, toc_json, words_json in zip(
-                pdf["doc_id"].tolist(), pdf["page_no"].tolist(),
-                pdf["width"].tolist(), pdf["height"].tolist(),
-                pdf["scale_factor"].tolist(), pdf["payload"].tolist(),
-                pdf["toc_json"].tolist(), words_col):
-            if doc_id != cur_id:
-                if cur_id is not None:
-                    out.append(_row(assemble_page_results(cur_id, cur_results)))
-                cur_id, cur_results = doc_id, []
-            if payload is None:  # explode_outer row: document with no pages
-                continue
-            toc = None if toc_json is None else json.loads(toc_json)
-            words = None if words_json is None else json.loads(words_json)
-            cur_results.append(process_page(
-                payload, int(w), int(h), doc_id=doc_id, page_no=int(page_no),
-                scale_factor=float(sf) if sf is not None else 1.0, toc=toc,
-                words=words,
-            ))
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-    if cur_id is not None:
-        yield pd.DataFrame([_row(assemble_page_results(cur_id, cur_results))],
-                           columns=cols)
-
-
-def extract_paged(docs: DataFrame) -> DataFrame:
-    """Fused parse+assemble over PAGE-grain distribution: exactly ONE
-    shuffle (hash by ``doc_id``) and ONE Python stage.
-
-    Use when the input arrives at page grain (e.g. a page-stream ingest)
-    or when nested per-doc rows would be too large: pages are exploded,
-    co-located by ``doc_id`` via ``repartition`` +
-    ``sortWithinPartitions(doc_id, page_no)``, and the UDF reassembles
-    documents with a group-carry across Arrow batches. For doc-grain
-    inputs prefer ``extract_fused`` (zero shuffles)."""
-    n_part = docs.sparkSession.sparkContext.defaultParallelism * 4
-    pages = docs.select(
-        "doc_id", F.explode_outer("pages").alias("page")
-    ).select("doc_id", "page.*")
-    pages = pages.repartition(n_part, "doc_id").sortWithinPartitions("doc_id", "page_no")
-    return pages.mapInPandas(_parse_assemble_batches, schema=schemas.OUTPUT)
-
-
-def extract_scatter(docs: DataFrame, shuffle_pages: bool = True) -> DataFrame:
+def extract_scatter(docs: DataFrame) -> DataFrame:
     """Two-stage pipeline: page-scatter parse + JVM document reassembly.
     Use when single documents are so large that one document per task
     would straggle (page-grain parallelism is preserved here)."""
-    return assemble_documents(parse_pages(docs, shuffle_pages=shuffle_pages))
+    return assemble_documents(parse_pages(docs))
 
 
-def extract(docs: DataFrame, shuffle_pages: bool = True,
-            mode: str = "fused") -> DataFrame:
+def extract(docs: DataFrame, mode: str = "fused") -> DataFrame:
     """Full pipeline: input table → (doc_id, ordered spans, markdown, …).
 
-    mode: 'fused' (doc-grain, zero shuffles — default), 'paged' (page
-    grain, one shuffle), 'scatter' (page scatter + JVM reassembly, two
-    shuffles — giant-doc corpora)."""
+    mode: 'fused' (doc-grain, zero shuffles — default) or 'scatter' (page
+    scatter + JVM reassembly, two shuffles — giant-doc corpora)."""
     if mode == "fused":
         return extract_fused(docs)
-    if mode == "paged":
-        return extract_paged(docs)
-    return extract_scatter(docs, shuffle_pages=shuffle_pages)
-
-
-# --------------------------------------------------------------------------
-# metrics (A4/A5 analog)
-# --------------------------------------------------------------------------
-
-def page_metrics(parsed: DataFrame) -> DataFrame:
-    """Per-status page counters — the reference's task stats
-    (app/utils/executor/stats.py:22-41) as a groupBy."""
-    return parsed.groupBy("status").agg(
-        F.count("*").alias("n_pages"),
-        F.sum("n_cells").alias("n_cells"),
-    )
+    if mode == "scatter":
+        return extract_scatter(docs)
+    raise ValueError(f"unknown extract mode {mode!r}; valid modes: "
+                     "'fused', 'scatter'")
 
 
 # --------------------------------------------------------------------------

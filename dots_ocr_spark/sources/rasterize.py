@@ -23,7 +23,7 @@ Reference behavior mirrored (NOT code-copied — the analog is
 Spark shape: one PDF (binary column) in → one row PER PAGE out via an
 Arrow-batched ``mapInPandas`` — the same fused, zero-shuffle grain as
 the extraction pipeline; a giant PDF's pages land in one task, which is
-exactly the skew the paged/scatter machinery downstream already
+exactly the skew the page-grain machinery downstream already
 handles (pipeline.extract_scatter, checkpoint.run_extraction_paged).
 
 Real backends, import-gated exactly like ``textops._decode_real``:
@@ -216,8 +216,10 @@ def rasterize_pdfs(docs: DataFrame, pdf_col: str = "pdf_bytes",
     """(doc_id, pdf_bytes) → one row per rendered page. ``renderer``:
     ``'stub'`` (deterministic, any container) or ``'real'`` (first of
     fitz/pypdfium2 that imports; raises where neither exists). The
-    output page grain feeds ``pipeline.parse_pages_exploded`` /
-    ``checkpoint.run_extraction_paged`` directly."""
+    output carries the page-grain unit keys (``doc_id``, ``page_no``)
+    and geometry but no layout ``payload``: a layout stage has to add
+    ``payload``/``toc_json`` before ``pipeline.parse_pages_exploded`` or
+    ``checkpoint.run_extraction_paged`` can parse it."""
     if renderer == "real":
         backend = real_backend()
         if backend is None:

@@ -39,7 +39,7 @@ def main() -> int:
     ap.add_argument("--output", required=True, help="run base dir (output + lineage)")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--buckets-per-commit", type=int, default=None)
-    ap.add_argument("--mode", choices=["fused", "paged", "scatter"], default=None)
+    ap.add_argument("--mode", choices=["fused", "scatter"], default=None)
     ap.add_argument("--page-checkpoint", action="store_true",
                     help="checkpoint at (bucket, page-range) grain instead "
                          "of bucket grain: a crash mid-giant-document "

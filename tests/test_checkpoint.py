@@ -230,3 +230,18 @@ def test_bucket_col_layout_mismatch_fails_fast(spark, docs, tmp_path):
             buckets_per_commit=4, run_id="mislaid", bucket_col="bucket")
     # no lineage was committed for the mismatched layout
     assert checkpoint.completed_buckets(spark, base) == set()
+
+    # a FINER layout (2 * n_buckets) passes the per-group guard — every
+    # selected doc does hash into its group — but the docs of buckets
+    # >= n_buckets are in no group and would silently never be read
+    src = str(tmp_path / "finer_src")
+    docs.withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("doc_id"), F.lit(2 * N_BUCKETS)).cast("int"),
+    ).write.partitionBy("bucket").parquet(src)
+    base = str(tmp_path / "finer")
+    with pytest.raises(ValueError, match="outside"):
+        checkpoint.run_extraction(
+            spark, spark.read.parquet(src), base, n_buckets=N_BUCKETS,
+            buckets_per_commit=4, run_id="finer", bucket_col="bucket")
+    assert checkpoint.completed_buckets(spark, base) == set()

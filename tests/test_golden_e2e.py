@@ -15,7 +15,7 @@ def golden():
     return {d["doc_id"]: oracle.extract_document(d) for d in docs}
 
 
-@pytest.fixture(scope="module", params=["fused", "paged", "scatter"])
+@pytest.fixture(scope="module", params=["fused", "scatter"])
 def spark_result(spark, request):
     docs_df = pipeline.generate_input(spark, N_DOCS, partitions=8)
     rows = pipeline.extract(docs_df, mode=request.param).collect()
@@ -59,6 +59,15 @@ def test_counters_and_status(golden, spark_result):
         assert got["n_fallback"] == exp["n_fallback"], doc_id
         assert got["n_spans"] == exp["n_spans"], doc_id
         assert got["status"] == exp["status"], doc_id
+
+
+@pytest.mark.parametrize("mode", ["fuse", "paged", "SCATTER"])
+def test_extract_rejects_unknown_mode(spark, mode):
+    """A misspelt or retired mode must fail loudly, not silently run
+    some other physical plan."""
+    docs_df = pipeline.generate_input(spark, 1, partitions=1)
+    with pytest.raises(ValueError, match="valid modes: 'fused', 'scatter'"):
+        pipeline.extract(docs_df, mode=mode)
 
 
 def test_statuses_exercise_all_paths(golden):
