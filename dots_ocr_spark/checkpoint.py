@@ -236,13 +236,16 @@ def read_output(spark: SparkSession, base: str) -> DataFrame:
 # document instead of its first page.
 #
 #   * Work unit = (bucket, prange): bucket = pmod(xxhash64(doc_id), B),
-#     prange = page_no // pages_per_range. Stable across runs.
+#     prange = page_no // pages_per_range. Stable across runs. A doc
+#     with no (or null) pages is one null-page row in prange 0, as in
+#     the scatter pipeline, so assembly still emits it.
 #   * Output = PARSED PAGE grain (schemas.PARSED_PAGE + the unit
 #     columns), parquet partitioned by (bucket, prange) with dynamic
 #     overwrite — same atomic-replace guarantee as the bucket runner.
 #   * The unit domain is data-derived (bucket b has ranges
-#     0..max(ceil(n_pages/r))-1 over its docs) — a bounded
-#     n_buckets-row collect, recomputed identically on every resume.
+#     0..max(max_page_no // r) over its docs, range 0 for a doc with
+#     no pages) — a bounded n_buckets-row collect, recomputed
+#     identically on every resume.
 #   * Document assembly (``assemble_from_page_checkpoint``) is the
 #     scatter pipeline's stage 2 (pure-JVM ``assemble_documents``) over
 #     the completed page table.
@@ -281,17 +284,24 @@ def completed_page_units(spark: SparkSession, base: str) -> set[tuple[int, int]]
     return {(r["bucket"], r["prange"]) for r in rows}
 
 
+def _prange(pages_per_range: int):
+    """The page-range unit key; a null-page row lands in prange 0."""
+    return F.coalesce(
+        F.floor(F.col("page_no") / F.lit(pages_per_range)).cast("int"),
+        F.lit(0))
+
+
 def _page_grain(docs: DataFrame, n_buckets: int, pages_per_range: int) -> DataFrame:
-    """Explode the input to page grain with the (bucket, prange) unit key."""
+    """Explode the input to page grain with the (bucket, prange) unit key.
+    ``explode_outer`` keeps a document with no (or null) pages as one
+    null-page row (``pipeline.parse_pages`` does the same)."""
     return (
         docs.withColumn(
             "bucket",
             F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
-        .select("doc_id", "bucket", F.explode("pages").alias("page"))
+        .select("doc_id", "bucket", F.explode_outer("pages").alias("page"))
         .select("doc_id", "bucket", "page.*")
-        .withColumn(
-            "prange",
-            F.floor(F.col("page_no") / F.lit(pages_per_range)).cast("int"))
+        .withColumn("prange", _prange(pages_per_range))
     )
 
 
@@ -329,7 +339,7 @@ def run_extraction_paged(
                 F.size("pages") > 0,
                 F.floor(F.array_max("pages.page_no") / F.lit(pages_per_range))
                 .cast("int") + 1,
-            ).otherwise(F.lit(0)).alias("npr"),
+            ).otherwise(F.lit(1)).alias("npr"),  # zero pages: prange 0
             F.when(
                 F.size("pages") > 0, F.array_min("pages.page_no")
             ).otherwise(F.lit(0)).alias("min_pno"),
@@ -367,9 +377,7 @@ def run_extraction_paged(
         out = parsed.withColumn(
             "bucket",
             F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"),
-        ).withColumn(
-            "prange",
-            F.floor(F.col("page_no") / F.lit(pages_per_range)).cast("int"))
+        ).withColumn("prange", _prange(pages_per_range))
         out.write.mode("overwrite").partitionBy("bucket", "prange") \
             .parquet(_pages_path(base))
 
@@ -379,7 +387,7 @@ def run_extraction_paged(
                 .where(unit_key.isin([b * _PR_ENC + p for b, p in group]))
                 .groupBy("bucket", "prange")
                 .agg(
-                    F.count("*").alias("n_pages"),
+                    F.count("page_no").alias("n_pages"),
                     F.sum((F.col("status") == "failed").cast("long"))
                     .alias("n_failed_pages"),
                     F.sum((F.col("status") == "fallback").cast("long"))

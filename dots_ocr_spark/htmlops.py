@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sources.ingest import chunk_words
+from .sources.ingest import _hex_draw, chunk_words
 
 #: words per synthesized content block (matches the multipage chunking)
 HB_CHUNK_WORDS = 10
@@ -89,11 +89,7 @@ def synthesize_html(docs: DataFrame, doc_id_col: str = "doc_id",
     blocks = F.transform(
         chunks,
         lambda ch, j: F.when(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(did, F.lit(":hb:"), j.cast("string"))),
-                    1, 1),
-                16, 10).cast("int") < HB_BOILER_BELOW,
+            _hex_draw(did, ":hb:", j, 1) < HB_BOILER_BELOW,
             F.concat(F.lit('<div class="promo"><a href="/x">'), ch,
                      F.lit("</a></div>")),
         ).otherwise(F.concat(F.lit("<p>"), ch, F.lit("</p>"))),

@@ -6,12 +6,23 @@ dotsocr_service.py:568-607, re-expressed as table-to-table operators).
 UDF): paginating a flat text corpus into page payloads is string/array
 algebra, which Catalyst codegens — the Python boundary stays reserved for
 the parse stage.
+
+Every ``interleaved_*`` generator shares one page-layout builder
+(``_paginate``: doc-id cast, ``chunk_words``, page count, one
+``transform`` over the page numbers, the doc-row select) plus the
+``_page`` / ``_cell`` / ``_block_bbox`` struct helpers; each generator
+states only its placement, draw and payload rules.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..schemas import SPAN
 
 PAGE_W, PAGE_H = 1700, 2200
 CHUNK_WORDS = 40
@@ -36,27 +47,6 @@ MP_FALLBACK_BELOW = 48
 MP_PIC_BELOW = 8
 
 
-def _cells_expr(words: Column) -> Column:
-    """array<struct<bbox,category,text>> from a word array: one Text block
-    per CHUNK_WORDS words, stacked vertically with clean XY-cut gaps."""
-    n_chunks = F.ceil(F.size(words) / F.lit(CHUNK_WORDS)).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.struct(
-            F.array(
-                F.lit(100),
-                F.lit(BODY_TOP) + i * (BLOCK_H + BLOCK_GAP),
-                F.lit(PAGE_W - 100),
-                F.lit(BODY_TOP) + i * (BLOCK_H + BLOCK_GAP) + BLOCK_H,
-            ).alias("bbox"),
-            F.lit("Text").alias("category"),
-            F.array_join(
-                F.slice(words, i * CHUNK_WORDS + 1, CHUNK_WORDS), " "
-            ).alias("text"),
-        ),
-    )
-
-
 def chunk_words(text: Column, n_words: int) -> Column:
     """``n_words``-word chunks of a space-separated text column via ONE
     codegen'd regexp pass: every n-th space becomes a LITERAL U+0001
@@ -78,22 +68,134 @@ def chunk_words(text: Column, n_words: int) -> Column:
     return F.split(marked, "")
 
 
+# ---------------------------------------------------------------------------
+# the shared page-layout builder
+# ---------------------------------------------------------------------------
+
+_EMPTY_SPANS = T.ArrayType(SPAN)
+
+
+def _md5_prefix(did: Column, salt: str, p: Column, n_chars: int) -> Column:
+    """The first ``n_chars`` hex chars of ``md5(doc_id || salt || page_no)``
+    — DuckDB's ``substring(md5(...), 1, n)``."""
+    return F.substring(
+        F.md5(F.concat(did, F.lit(salt), p.cast("string"))), 1, n_chars)
+
+
+def _hex_draw(did: Column, salt: str, p: Column, n_chars: int) -> Column:
+    """Deterministic integer draw from the first ``n_chars`` hex chars of
+    ``md5(doc_id || salt || page_no)`` — the same value DuckDB computes
+    with ``CAST(('0x' || substring(md5(...), 1, n)) AS INT)``."""
+    return F.conv(_md5_prefix(did, salt, p, n_chars), 16, 10).cast("int")
+
+
+def _block_bbox(row, x1=100, x2=PAGE_W - 100) -> Column:
+    """bbox of the ``row``-th ``BLOCK_H`` block stacked below ``BODY_TOP``
+    with ``BLOCK_GAP`` gaps (clean XY-cut cuts); full width by default."""
+    top = F.lit(BODY_TOP) + row * (BLOCK_H + BLOCK_GAP)
+    return F.array(F.lit(x1), top, F.lit(x2), top + BLOCK_H)
+
+
+def _stack_height(n_blocks: Column) -> Column:
+    """Page height that fits ``n_blocks`` stacked blocks (never below
+    ``PAGE_H``), so no cell is clamped by the page extent."""
+    return F.greatest(
+        F.lit(PAGE_H),
+        F.lit(BODY_TOP) + n_blocks * (BLOCK_H + BLOCK_GAP) + F.lit(60),
+    ).cast("int")
+
+
+def _cell(bbox, category: str, text: Column) -> Column:
+    """One payload cell; ``bbox`` is an array Column or a fixed
+    ``(x1, y1, x2, y2)`` tuple."""
+    if not isinstance(bbox, Column):
+        bbox = F.array(*map(F.lit, bbox))
+    return F.struct(
+        bbox.alias("bbox"),
+        F.lit(category).alias("category"),
+        text.alias("text"),
+    )
+
+
+def _text_cells(chunks: Column, bbox=_block_bbox) -> Column:
+    """One Text cell per chunk, chunk ``j`` placed at ``bbox(j)``."""
+    return F.transform(chunks, lambda ch, j: _cell(bbox(j), "Text", ch))
+
+
+def _page(p: Column, payload: Column, toc_json=None, words_json=None,
+          width=PAGE_W, height=PAGE_H, scale=1.0) -> Column:
+    """THE page struct of the input table (``schemas.PAGE`` field order)."""
+    null = F.lit(None).cast("string")
+    return F.struct(
+        p.cast("int").alias("page_no"),
+        F.lit(width).alias("width"),
+        F.lit(height).alias("height"),
+        F.lit(scale).alias("scale_factor"),
+        payload.alias("payload"),
+        (null if toc_json is None else toc_json).alias("toc_json"),
+        (null if words_json is None else words_json).alias("words_json"),
+    )
+
+
+def _doc_rows(docs: DataFrame, did: Column, pages: Column, n_pages: Column,
+              spans=None) -> DataFrame:
+    """THE doc-row select of the input table (``schemas.INPUT`` order)."""
+    if spans is None:
+        spans = F.array().cast(_EMPTY_SPANS)
+    return docs.select(
+        did.alias("doc_id"),
+        spans.alias("spans"),
+        pages.alias("pages"),
+        n_pages.alias("n_pages"),
+        F.lit("normal").alias("size_class"),
+    )
+
+
+def _paginate(docs: DataFrame, doc_id_col: str, text_col: str,
+              per_page: int | None,
+              build: Callable[[Column, Column, Column], Column]) -> DataFrame:
+    """Flat corpus → interleaved doc rows: the text is cut into
+    ``MP_CHUNK_WORDS``-word chunks, ``per_page`` chunks per page, and
+    ``build(page_no, page_chunks, doc_id)`` returns each page's struct
+    (via ``_page``). ``per_page=None`` puts every chunk on one page 0.
+
+    The page lambda references only the chunk array and the doc id: a
+    higher-order-function body is interpreted, so every outer expression
+    it mentions is re-evaluated per element."""
+    did = F.col(doc_id_col).cast("string")
+    chunks = chunk_words(F.col(text_col), MP_CHUNK_WORDS)
+    if per_page is None:
+        return _doc_rows(
+            docs, did, F.array(build(F.lit(0), chunks, did)), F.lit(1))
+    n_pages = F.ceil(F.size(chunks) / F.lit(per_page)).cast("int")
+    pages = F.transform(
+        F.sequence(F.lit(0), n_pages - 1),
+        lambda p: build(
+            p, F.slice(chunks, p * per_page + 1, per_page), did))
+    return _doc_rows(docs, did, pages, n_pages)
+
+
+def _without_close(payload: Column) -> Column:
+    """A JSON-array payload minus its closing ``]``."""
+    return payload.substr(F.lit(1), F.length(payload) - 1)
+
+
 def interleaved_from_text(docs: DataFrame, doc_id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
     """Flat (doc_id, text) corpus → the interleaved input table shape
-    (doc_id, spans, pages, n_pages, size_class), single-page documents.
+    (doc_id, spans, pages, n_pages, size_class), single-page documents:
+    one stacked Text block per ``CHUNK_WORDS`` space-split words.
 
     The payload is the same VLM-style JSON the extraction stage parses, so
     a flat corpus rides the identical pipeline as native interleaved docs.
     """
     words = F.split(F.col(text_col), " ")
-    cells = _cells_expr(words)
-    n_chunks = F.size(cells)
-    height = F.greatest(
-        F.lit(PAGE_H),
-        F.lit(BODY_TOP) + n_chunks * (BLOCK_H + BLOCK_GAP) + F.lit(60),
-    ).cast("int")
-
+    n_chunks = F.ceil(F.size(words) / F.lit(CHUNK_WORDS)).cast("int")
+    cells = _text_cells(F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.array_join(
+            F.slice(words, i * CHUNK_WORDS + 1, CHUNK_WORDS), " "),
+    ))
     spans = F.transform(
         cells,
         lambda c, i: F.struct(
@@ -103,24 +205,10 @@ def interleaved_from_text(docs: DataFrame, doc_id_col: str = "doc_id",
             i.cast("int").alias("offset"),
         ),
     )
-    pages = F.array(
-        F.struct(
-            F.lit(0).alias("page_no"),
-            F.lit(PAGE_W).alias("width"),
-            height.alias("height"),
-            F.lit(1.0).alias("scale_factor"),
-            F.to_json(cells).alias("payload"),
-            F.lit(None).cast("string").alias("toc_json"),
-            F.lit(None).cast("string").alias("words_json"),
-        )
-    )
-    return docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        spans.alias("spans"),
-        pages.alias("pages"),
-        F.lit(1).alias("n_pages"),
-        F.lit("normal").alias("size_class"),
-    )
+    page = _page(F.lit(0), F.to_json(cells),
+                 height=_stack_height(F.size(cells)))
+    return _doc_rows(docs, F.col(doc_id_col).cast("string"),
+                     F.array(page), F.lit(1), spans)
 
 
 # ---------------------------------------------------------------------------
@@ -164,21 +252,6 @@ def flip_toc_y(toc_df: DataFrame, y_col: str = "to_y",
 # multi-page interleaved generator (flagship driver-oracle input)
 # ---------------------------------------------------------------------------
 
-_EMPTY_SPANS = (
-    "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
-
-
-def _hex_draw(did: Column, salt: str, p: Column, n_chars: int) -> Column:
-    """Deterministic integer draw from the first ``n_chars`` hex chars of
-    ``md5(doc_id || salt || page_no)`` — the same value DuckDB computes
-    with ``CAST(('0x' || substring(md5(...), 1, n)) AS INT)``."""
-    return F.conv(
-        F.substring(F.md5(F.concat(did, F.lit(salt), p.cast("string"))),
-                    1, n_chars),
-        16, 10,
-    ).cast("int")
-
 
 def interleaved_multipage(docs: DataFrame, doc_id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
@@ -208,70 +281,23 @@ def interleaved_multipage(docs: DataFrame, doc_id_col: str = "doc_id",
         span carries the P7 crop identity
         ``crop-<md5(doc:page:x1,y1,x2,y2)[:16]>`` (ocr_task.py:150-155).
     """
-    did = F.col(doc_id_col).cast("string")
-    chunks = chunk_words(F.col(text_col), MP_CHUNK_WORDS)
-    n_chunks = F.size(chunks)
-    n_pages = F.ceil(n_chunks / F.lit(MP_CHUNKS_PER_PAGE)).cast("int")
+    pic = F.array(_cell(MP_PIC_BBOX, "Picture", F.lit(None).cast("string")))
 
-    x1, y1, x2, y2 = MP_PIC_BBOX
-    pic_cell = F.struct(
-        F.array(F.lit(x1), F.lit(y1), F.lit(x2), F.lit(y2)).alias("bbox"),
-        F.lit("Picture").alias("category"),
-        F.lit(None).cast("string").alias("text"),
-    )
+    def build(p: Column, chunks: Column, did: Column) -> Column:
+        text_cells = _text_cells(chunks)
+        base = F.to_json(
+            F.when(_hex_draw(did, ":pic:", p, 1) < MP_PIC_BELOW,
+                   F.concat(text_cells, pic)).otherwise(text_cells))
+        sv = _hex_draw(did, ":st:", p, 2)
+        return _page(p, (
+            F.when(sv < MP_FAILED_BELOW,
+                   F.lit('[{"bbox": [0, 0, 10, 10]}]'))
+            .when(sv < MP_FALLBACK_BELOW,
+                  F.concat(_without_close(base), F.lit(',{"bbox": [')))
+            .otherwise(base)
+        ))
 
-    def _page(chunks_col: Column, did_col: Column):
-        def build(p: Column) -> Column:
-            pchunks = F.slice(
-                chunks_col, p * MP_CHUNKS_PER_PAGE + 1, MP_CHUNKS_PER_PAGE)
-            text_cells = F.transform(
-                pchunks,
-                lambda ch, j: F.struct(
-                    F.array(
-                        F.lit(100),
-                        F.lit(BODY_TOP) + j * (BLOCK_H + BLOCK_GAP),
-                        F.lit(PAGE_W - 100),
-                        F.lit(BODY_TOP) + j * (BLOCK_H + BLOCK_GAP) + BLOCK_H,
-                    ).alias("bbox"),
-                    F.lit("Text").alias("category"),
-                    ch.alias("text"),
-                ),
-            )
-            has_pic = _hex_draw(did_col, ":pic:", p, 1) < MP_PIC_BELOW
-            cells = F.when(
-                has_pic, F.concat(text_cells, F.array(pic_cell))
-            ).otherwise(text_cells)
-            base = F.to_json(cells)
-            sv = _hex_draw(did_col, ":st:", p, 2)
-            payload = (
-                F.when(sv < MP_FAILED_BELOW,
-                       F.lit('[{"bbox": [0, 0, 10, 10]}]'))
-                .when(sv < MP_FALLBACK_BELOW,
-                      F.concat(base.substr(F.lit(1), F.length(base) - 1),
-                               F.lit(',{"bbox": [')))
-                .otherwise(base)
-            )
-            return F.struct(
-                p.cast("int").alias("page_no"),
-                F.lit(PAGE_W).alias("width"),
-                F.lit(PAGE_H).alias("height"),
-                F.lit(1.0).alias("scale_factor"),
-                payload.alias("payload"),
-                F.lit(None).cast("string").alias("toc_json"),
-                F.lit(None).cast("string").alias("words_json"),
-            )
-
-        return build
-
-    pages = F.transform(
-        F.sequence(F.lit(0), n_pages - 1), _page(chunks, did))
-    return docs.select(
-        did.alias("doc_id"),
-        F.array().cast(_EMPTY_SPANS).alias("spans"),
-        pages.alias("pages"),
-        n_pages.alias("n_pages"),
-        F.lit("normal").alias("size_class"),
-    )
+    return _paginate(docs, doc_id_col, text_col, MP_CHUNKS_PER_PAGE, build)
 
 
 # ---- TOC generator knobs (interleaved_toc) --------------------------------
@@ -331,95 +357,39 @@ def interleaved_toc(docs: DataFrame, doc_id_col: str = "doc_id",
     The decoy entry (ratio 0 < the 40 gate against every header) proves
     the F8 no-match path in the same rows.
     """
-    did = F.col(doc_id_col).cast("string")
-    chunks = chunk_words(F.col(text_col), MP_CHUNK_WORDS)
-    n_chunks = F.size(chunks)
-    n_pages = F.ceil(n_chunks / F.lit(MP_CHUNKS_PER_PAGE)).cast("int")
-
-    hx1, hy1, hx2, hy2 = TOC_HDR_BBOX
-    lx1, ly1, lx2, ly2 = TOC_LI_BBOX
-
-    def _page(chunks_col: Column, did_col: Column):
-        def build(p: Column) -> Column:
-            hd = F.concat(
-                F.lit("sec "),
-                F.substring(F.md5(F.concat(did_col, F.lit(":hd:"),
-                                           p.cast("string"))), 1, 8))
-            li = F.concat(
-                F.lit("li "),
-                F.substring(F.md5(F.concat(did_col, F.lit(":li:"),
-                                           p.cast("string"))), 1, 8))
-            pchunks = F.slice(
-                chunks_col, p * MP_CHUNKS_PER_PAGE + 1, MP_CHUNKS_PER_PAGE)
-            hdr_cell = F.struct(
-                F.array(F.lit(hx1), F.lit(hy1), F.lit(hx2), F.lit(hy2))
-                 .alias("bbox"),
-                F.lit("Section-header").alias("category"),
-                F.concat(F.lit("## "), hd).alias("text"),
-            )
-            text_cells = F.transform(
-                pchunks,
-                lambda ch, j: F.struct(
-                    F.array(
-                        F.lit(100),
-                        F.lit(BODY_TOP) + (j + 1) * (BLOCK_H + BLOCK_GAP),
-                        F.lit(PAGE_W - 100),
-                        F.lit(BODY_TOP) + (j + 1) * (BLOCK_H + BLOCK_GAP)
-                        + BLOCK_H,
-                    ).alias("bbox"),
-                    F.lit("Text").alias("category"),
-                    ch.alias("text"),
-                ),
-            )
-            li_cell = F.struct(
-                F.array(F.lit(lx1), F.lit(ly1), F.lit(lx2), F.lit(ly2))
-                 .alias("bbox"),
-                F.lit("List-item").alias("category"),
-                li.alias("text"),
-            )
-            cells = F.concat(
-                F.array(hdr_cell), text_cells, F.array(li_cell))
-            d = _hex_draw(did_col, ":toc:", p, 1)
-            # half the matched pages aim the destination inside the
-            # header bbox (distance 0), half 50px below it (distance 50
-            # vs 1600 to the List-item — still claims the header, but
-            # through the Euclidean branch)
-            to_y = F.when(d < TOC_OUTSIDE_FROM, F.lit(TOC_DEST[1])) \
-                .otherwise(F.lit(TOC_DEST_OUTSIDE[1]))
-            toc_entry = F.struct(
-                (F.lit(1) + d % 3).alias("level"),
-                hd.alias("text"),
-                F.array(F.lit(TOC_DEST[0]), to_y).alias("to"),
-            )
-            decoy = F.struct(
-                F.lit(5).alias("level"),
-                F.lit(TOC_DECOY).alias("text"),
-                F.array(F.lit(TOC_DEST[0]), F.lit(TOC_DEST[1])).alias("to"),
-            )
-            toc_json = F.when(
-                d < TOC_MATCH_BELOW, F.to_json(F.array(toc_entry, decoy))
-            ).otherwise(F.lit("[]"))
-            return F.struct(
-                p.cast("int").alias("page_no"),
-                F.lit(PAGE_W).alias("width"),
-                F.lit(PAGE_H).alias("height"),
-                F.lit(1.0).alias("scale_factor"),
-                F.to_json(cells).alias("payload"),
-                toc_json.alias("toc_json"),
-                F.lit(None).cast("string").alias("words_json"),
-            )
-
-        return build
-
-    pages = F.transform(
-        F.sequence(F.lit(0), n_pages - 1), _page(chunks, did))
-    return docs.select(
-        did.alias("doc_id"),
-        F.array().cast(_EMPTY_SPANS).alias("spans"),
-        pages.alias("pages"),
-        n_pages.alias("n_pages"),
-        F.lit("normal").alias("size_class"),
+    decoy = F.struct(
+        F.lit(5).alias("level"),
+        F.lit(TOC_DECOY).alias("text"),
+        F.array(F.lit(TOC_DEST[0]), F.lit(TOC_DEST[1])).alias("to"),
     )
+
+    def build(p: Column, chunks: Column, did: Column) -> Column:
+        hd = F.concat(F.lit("sec "), _md5_prefix(did, ":hd:", p, 8))
+        li = F.concat(F.lit("li "), _md5_prefix(did, ":li:", p, 8))
+        cells = F.concat(
+            F.array(_cell(TOC_HDR_BBOX, "Section-header",
+                          F.concat(F.lit("## "), hd))),
+            _text_cells(chunks, lambda j: _block_bbox(j + 1)),
+            F.array(_cell(TOC_LI_BBOX, "List-item", li)),
+        )
+        d = _hex_draw(did, ":toc:", p, 1)
+        # half the matched pages aim the destination inside the header
+        # bbox (distance 0), half 50px below it (distance 50 vs 1600 to
+        # the List-item — still claims the header, but through the
+        # Euclidean branch)
+        to_y = F.when(d < TOC_OUTSIDE_FROM, F.lit(TOC_DEST[1])) \
+            .otherwise(F.lit(TOC_DEST_OUTSIDE[1]))
+        toc_entry = F.struct(
+            (F.lit(1) + d % 3).alias("level"),
+            hd.alias("text"),
+            F.array(F.lit(TOC_DEST[0]), to_y).alias("to"),
+        )
+        toc_json = F.when(
+            d < TOC_MATCH_BELOW, F.to_json(F.array(toc_entry, decoy))
+        ).otherwise(F.lit("[]"))
+        return _page(p, F.to_json(cells), toc_json=toc_json)
+
+    return _paginate(docs, doc_id_col, text_col, MP_CHUNKS_PER_PAGE, build)
 
 
 # ---- two-column generator knobs (interleaved_twocol) ----------------------
@@ -457,78 +427,21 @@ def interleaved_twocol(docs: DataFrame, doc_id_col: str = "doc_id",
         markdown, AND the header/footer-free markdown (F3 — the nohf
         variant drops exactly those two cells) are SQL-predictable.
     """
-    did = F.col(doc_id_col).cast("string")
-    chunks = chunk_words(F.col(text_col), MP_CHUNK_WORDS)
-    n_chunks = F.size(chunks)
-    n_pages = F.ceil(n_chunks / F.lit(TC_CHUNKS_PER_PAGE)).cast("int")
+    def grid_bbox(j: Column) -> Column:
+        dx = (j % 2) * (TC_RCOL_X - TC_LCOL_X)
+        return _block_bbox((j - j % 2) / 2, F.lit(TC_LCOL_X) + dx,
+                           F.lit(TC_LCOL_X + TC_COL_W) + dx) \
+            .cast("array<int>")
 
-    hx1, hy1, hx2, hy2 = TC_HDR_BBOX
-    fx1, fy1, fx2, fy2 = TC_FTR_BBOX
+    def build(p: Column, chunks: Column, did: Column) -> Column:
+        ftr = _cell(TC_FTR_BBOX, "Page-footer",
+                    F.concat(F.lit("ft "), _md5_prefix(did, ":pf:", p, 8)))
+        hdr = _cell(TC_HDR_BBOX, "Page-header",
+                    F.concat(F.lit("hd "), _md5_prefix(did, ":ph:", p, 8)))
+        return _page(p, F.to_json(F.concat(
+            F.array(ftr), _text_cells(chunks, grid_bbox), F.array(hdr))))
 
-    def _page(chunks_col: Column, did_col: Column):
-        def build(p: Column) -> Column:
-            hd = F.concat(
-                F.lit("hd "),
-                F.substring(F.md5(F.concat(did_col, F.lit(":ph:"),
-                                           p.cast("string"))), 1, 8))
-            ft = F.concat(
-                F.lit("ft "),
-                F.substring(F.md5(F.concat(did_col, F.lit(":pf:"),
-                                           p.cast("string"))), 1, 8))
-            pchunks = F.slice(
-                chunks_col, p * TC_CHUNKS_PER_PAGE + 1, TC_CHUNKS_PER_PAGE)
-            text_cells = F.transform(
-                pchunks,
-                lambda ch, j: F.struct(
-                    F.array(
-                        F.lit(TC_LCOL_X)
-                        + (j % 2) * (TC_RCOL_X - TC_LCOL_X),
-                        F.lit(BODY_TOP)
-                        + (j - j % 2) / 2 * (BLOCK_H + BLOCK_GAP),
-                        F.lit(TC_LCOL_X + TC_COL_W)
-                        + (j % 2) * (TC_RCOL_X - TC_LCOL_X),
-                        F.lit(BODY_TOP)
-                        + (j - j % 2) / 2 * (BLOCK_H + BLOCK_GAP) + BLOCK_H,
-                    ).cast("array<int>").alias("bbox"),
-                    F.lit("Text").alias("category"),
-                    ch.alias("text"),
-                ),
-            )
-            ftr_cell = F.struct(
-                F.array(F.lit(fx1), F.lit(fy1), F.lit(fx2), F.lit(fy2))
-                 .alias("bbox"),
-                F.lit("Page-footer").alias("category"),
-                ft.alias("text"),
-            )
-            hdr_cell = F.struct(
-                F.array(F.lit(hx1), F.lit(hy1), F.lit(hx2), F.lit(hy2))
-                 .alias("bbox"),
-                F.lit("Page-header").alias("category"),
-                hd.alias("text"),
-            )
-            cells = F.concat(
-                F.array(ftr_cell), text_cells, F.array(hdr_cell))
-            return F.struct(
-                p.cast("int").alias("page_no"),
-                F.lit(PAGE_W).alias("width"),
-                F.lit(PAGE_H).alias("height"),
-                F.lit(1.0).alias("scale_factor"),
-                F.to_json(cells).alias("payload"),
-                F.lit(None).cast("string").alias("toc_json"),
-                F.lit(None).cast("string").alias("words_json"),
-            )
-
-        return build
-
-    pages = F.transform(
-        F.sequence(F.lit(0), n_pages - 1), _page(chunks, did))
-    return docs.select(
-        did.alias("doc_id"),
-        F.array().cast(_EMPTY_SPANS).alias("spans"),
-        pages.alias("pages"),
-        n_pages.alias("n_pages"),
-        F.lit("normal").alias("size_class"),
-    )
+    return _paginate(docs, doc_id_col, text_col, TC_CHUNKS_PER_PAGE, build)
 
 
 def interleaved_rich(docs: DataFrame, doc_id_col: str = "doc_id",
@@ -548,91 +461,37 @@ def interleaved_rich(docs: DataFrame, doc_id_col: str = "doc_id",
     column ⇒ reading order = payload order; every span and the page
     markdown are string algebra over the draws.
     """
-    did = F.col(doc_id_col).cast("string")
-    chunks = chunk_words(F.col(text_col), MP_CHUNK_WORDS)
-    n_chunks = F.size(chunks)
-    n_pages = F.ceil(n_chunks / F.lit(MP_CHUNKS_PER_PAGE)).cast("int")
+    def build(p: Column, chunks: Column, did: Column) -> Column:
+        def drawn(pre: str, salt: str, post: str = "") -> Column:
+            return F.concat(F.lit(pre), _md5_prefix(did, salt, p, 4),
+                            F.lit(post))
 
-    def block_bbox(j):
-        top = F.lit(BODY_TOP) + j * (BLOCK_H + BLOCK_GAP)
-        return F.array(
-            F.lit(100), top, F.lit(PAGE_W - 100), top + BLOCK_H)
-
-    def _cell(j, category, text):
-        return F.struct(
-            block_bbox(j).alias("bbox"),
-            F.lit(category).alias("category"),
-            text.alias("text"),
+        fd = _hex_draw(did, ":fb:", p, 1) % 4
+        formula = (
+            F.when(fd == 0, drawn("\\alpha_{", ":fm:", "}"))
+            .when(fd == 1, drawn("$$ E = ", ":fm:", " $$"))
+            .when(fd == 2, drawn("\\[ x + ", ":fm:", " \\]"))
+            .otherwise(drawn("a $x_", ":fm:", "$ b"))
         )
-
-    def _page(chunks_col: Column, did_col: Column):
-        def build(p: Column) -> Column:
-            def draw(salt):
-                return F.substring(
-                    F.md5(F.concat(did_col, F.lit(salt), p.cast("string"))),
-                    1, 4)
-
-            pchunks = F.slice(
-                chunks_col, p * MP_CHUNKS_PER_PAGE + 1, MP_CHUNKS_PER_PAGE)
-            text_cells = F.transform(
-                pchunks,
-                lambda ch, j: F.struct(
-                    block_bbox(j).alias("bbox"),
-                    F.lit("Text").alias("category"),
-                    ch.alias("text"),
-                ),
-            )
-            fd = _hex_draw(did_col, ":fb:", p, 1) % 4
-            fh = draw(":fm:")
-            formula_text = (
-                F.when(fd == 0, F.concat(F.lit("\\alpha_{"), fh, F.lit("}")))
-                .when(fd == 1, F.concat(F.lit("$$ E = "), fh, F.lit(" $$")))
-                .when(fd == 2, F.concat(F.lit("\\[ x + "), fh, F.lit(" \\]")))
-                .otherwise(F.concat(F.lit("a $x_"), fh, F.lit("$ b")))
-            )
+        extra = [
+            _cell(_block_bbox(2), "Formula", formula),
+            _cell(_block_bbox(3), "Table", drawn(
+                "<table><tr><td>", ":tb:", "</td></tr></table>")),
+            _cell(_block_bbox(4), "Caption", drawn("cap ", ":cp:")),
+            _cell(_block_bbox(5), "Footnote", drawn("fn ", ":fn:")),
+            _cell(_block_bbox(6), "Title", drawn("Ttl ", ":tt:")),
             # F5 probe: a Text cell overlapping the Title block at IoU
             # ≈ 0.993 (> the 0.9 threshold) — the SMALLER box, so the
             # IoU suppression must drop it before span emission. The
             # oracle never lists it: if suppression failed, the extra
             # span would break the row-count and value-hash compare.
-            iou_top = F.lit(BODY_TOP) + 6 * (BLOCK_H + BLOCK_GAP)
-            iou_cell = F.struct(
-                F.array(F.lit(100), iou_top, F.lit(PAGE_W - 110),
-                        iou_top + BLOCK_H).alias("bbox"),
-                F.lit("Text").alias("category"),
-                F.concat(F.lit("suppressed "), draw(":sp:")).alias("text"),
-            )
-            extra = F.array(
-                _cell(F.lit(2), "Formula", formula_text),
-                _cell(F.lit(3), "Table", F.concat(
-                    F.lit("<table><tr><td>"), draw(":tb:"),
-                    F.lit("</td></tr></table>"))),
-                _cell(F.lit(4), "Caption", F.concat(F.lit("cap "), draw(":cp:"))),
-                _cell(F.lit(5), "Footnote", F.concat(F.lit("fn "), draw(":fn:"))),
-                _cell(F.lit(6), "Title", F.concat(F.lit("Ttl "), draw(":tt:"))),
-                iou_cell,
-            )
-            return F.struct(
-                p.cast("int").alias("page_no"),
-                F.lit(PAGE_W).alias("width"),
-                F.lit(PAGE_H).alias("height"),
-                F.lit(1.0).alias("scale_factor"),
-                F.to_json(F.concat(text_cells, extra)).alias("payload"),
-                F.lit(None).cast("string").alias("toc_json"),
-                F.lit(None).cast("string").alias("words_json"),
-            )
+            _cell(_block_bbox(6, x2=PAGE_W - 110), "Text",
+                  drawn("suppressed ", ":sp:")),
+        ]
+        return _page(p, F.to_json(
+            F.concat(_text_cells(chunks), F.array(*extra))))
 
-        return build
-
-    pages = F.transform(
-        F.sequence(F.lit(0), n_pages - 1), _page(chunks, did))
-    return docs.select(
-        did.alias("doc_id"),
-        F.array().cast(_EMPTY_SPANS).alias("spans"),
-        pages.alias("pages"),
-        n_pages.alias("n_pages"),
-        F.lit("normal").alias("size_class"),
-    )
+    return _paginate(docs, doc_id_col, text_col, MP_CHUNKS_PER_PAGE, build)
 
 
 def interleaved_wordgrain(docs: DataFrame, doc_id_col: str = "doc_id",
@@ -654,69 +513,45 @@ def interleaved_wordgrain(docs: DataFrame, doc_id_col: str = "doc_id",
     the P4 ``bbox / scale_factor`` division runs (ocr_task.py:565) —
     putting the rescale path under the SAME external oracle (the output
     text is scale-invariant by construction)."""
-    did = F.col(doc_id_col).cast("string")
-    chunks = chunk_words(F.col(text_col), MP_CHUNK_WORDS)
-
-    def cell_bbox(j):
-        top = F.lit(BODY_TOP) + j * (BLOCK_H + BLOCK_GAP)
-        return F.transform(
-            F.array(F.lit(100), top, F.lit(PAGE_W - 100), top + BLOCK_H),
-            lambda v: (v * scale).cast("int"),
+    def build(p: Column, chunks: Column, did: Column) -> Column:
+        cells = F.transform(
+            chunks,
+            lambda ch, j: _cell(
+                F.transform(_block_bbox(j), lambda v: (v * scale).cast("int")),
+                "Text", F.lit(None).cast("string")),
         )
-
-    cells = F.transform(
-        chunks,
-        lambda ch, j: F.struct(
-            cell_bbox(j).alias("bbox"),
-            F.lit("Text").alias("category"),
-            F.lit(None).cast("string").alias("text"),
-        ),
-    )
-    # word rectangles: block j's words on one line at fixed 14px pitch,
-    # 10px wide, vertically inside the block band — always contained in
-    # the cell bbox, so the clip selects exactly the chunk's words
-    words = F.flatten(F.transform(
-        chunks,
-        lambda ch, j: F.transform(
-            F.split(ch, " "),
-            lambda w, i: F.struct(
-                (F.lit(100) + i * 14).alias("x0"),
-                (F.lit(BODY_TOP + 10) + j * (BLOCK_H + BLOCK_GAP)).alias("y0"),
-                (F.lit(110) + i * 14).alias("x1"),
-                (F.lit(BODY_TOP + 30) + j * (BLOCK_H + BLOCK_GAP)).alias("y1"),
-                w.alias("word"),
-                j.alias("block_no"),
-                F.lit(0).alias("line_no"),
-                i.alias("word_no"),
+        # word rectangles: block j's words on one line at fixed 14px
+        # pitch, 10px wide, vertically inside the block band — always
+        # contained in the cell bbox, so the clip selects exactly the
+        # chunk's words
+        words = F.flatten(F.transform(
+            chunks,
+            lambda ch, j: F.transform(
+                F.split(ch, " "),
+                lambda w, i: F.struct(
+                    (F.lit(100) + i * 14).alias("x0"),
+                    (F.lit(BODY_TOP + 10) + j * (BLOCK_H + BLOCK_GAP))
+                    .alias("y0"),
+                    (F.lit(110) + i * 14).alias("x1"),
+                    (F.lit(BODY_TOP + 30) + j * (BLOCK_H + BLOCK_GAP))
+                    .alias("y1"),
+                    w.alias("word"),
+                    j.alias("block_no"),
+                    F.lit(0).alias("line_no"),
+                    i.alias("word_no"),
+                ),
             ),
-        ),
-    ))
-    # dynamic page height: a >170-word doc stacks more than PAGE_H of
-    # blocks; growing the page keeps every cell AND word box inside the
-    # extent (the bbox clamp would otherwise cut cells while the word
-    # layer kept its coordinates, silently dropping clipped words)
-    height = F.greatest(
-        F.lit(PAGE_H),
-        F.lit(BODY_TOP) + F.size(chunks) * (BLOCK_H + BLOCK_GAP) + F.lit(60),
-    ).cast("int")
-    pages = F.array(
-        F.struct(
-            F.lit(0).alias("page_no"),
-            F.lit(PAGE_W * scale).alias("width"),
-            (height * scale).cast("int").alias("height"),
-            F.lit(float(scale)).alias("scale_factor"),
-            F.to_json(cells).alias("payload"),
-            F.lit(None).cast("string").alias("toc_json"),
-            F.to_json(words).alias("words_json"),
-        )
-    )
-    return docs.select(
-        did.alias("doc_id"),
-        F.array().cast(_EMPTY_SPANS).alias("spans"),
-        pages.alias("pages"),
-        F.lit(1).alias("n_pages"),
-        F.lit("normal").alias("size_class"),
-    )
+        ))
+        # dynamic page height: a >170-word doc stacks more than PAGE_H of
+        # blocks; growing the page keeps every cell AND word box inside
+        # the extent (the bbox clamp would otherwise cut cells while the
+        # word layer kept its coordinates, silently dropping clipped words)
+        height = _stack_height(F.size(chunks))
+        return _page(p, F.to_json(cells), words_json=F.to_json(words),
+                     width=PAGE_W * scale, height=(height * scale).cast("int"),
+                     scale=float(scale))
+
+    return _paginate(docs, doc_id_col, text_col, None, build)
 
 
 # ---- cleaner-probe generator knobs (interleaved_cleaner_probe) ------------
@@ -776,93 +611,35 @@ def interleaved_cleaner_probe(docs: DataFrame, doc_id_col: str = "doc_id",
         appended — pinning the exact regex capture semantics.
       * **control** — wellformed payload, one span per chunk.
     """
-    did = F.col(doc_id_col).cast("string")
-    chunks = chunk_words(F.col(text_col), MP_CHUNK_WORDS)
-    n_chunks = F.size(chunks)
-    n_pages = F.ceil(n_chunks / F.lit(MP_CHUNKS_PER_PAGE)).cast("int")
+    def head(bbox) -> str:
+        return '{"bbox": [%d, %d, %d, %d], "category": "Text", "text": "' \
+            % bbox
 
-    def _obj(bbox, txt: Column) -> Column:
-        x1, y1, x2, y2 = bbox
-        return F.concat(
-            F.lit('{"bbox": [%d, %d, %d, %d], "category": "Text", "text": "'
-                  % (x1, y1, x2, y2)),
-            txt, F.lit('"}'))
+    def build(p: Column, chunks: Column, did: Column) -> Column:
+        def obj(bbox, pre: str, salt: str) -> Column:
+            return F.concat(F.lit(head(bbox) + pre),
+                            _md5_prefix(did, salt, p, 8), F.lit('"}'))
 
-    def _page(chunks_col: Column, did_col: Column):
-        def build(p: Column) -> Column:
-            pchunks = F.slice(
-                chunks_col, p * MP_CHUNKS_PER_PAGE + 1, MP_CHUNKS_PER_PAGE)
-            text_cells = F.transform(
-                pchunks,
-                lambda ch, j: F.struct(
-                    F.array(
-                        F.lit(100),
-                        F.lit(BODY_TOP) + j * (BLOCK_H + BLOCK_GAP),
-                        F.lit(PAGE_W - 100),
-                        F.lit(BODY_TOP) + j * (BLOCK_H + BLOCK_GAP) + BLOCK_H,
-                    ).alias("bbox"),
-                    F.lit("Text").alias("category"),
-                    ch.alias("text"),
-                ),
-            )
-            base = F.to_json(text_cells)
+        base = F.to_json(_text_cells(chunks))
+        cc = obj(CP_CC_BBOX, "cc-", ":cc:")
+        objs = [cc, cc] + [
+            obj((100, CP_DUP_Y0 + j * CP_DUP_STEP, 1600,
+                 CP_DUP_Y0 + j * CP_DUP_STEP + CP_DUP_H), "dup-", ":dp:")
+            for j in range(5)
+        ] + [obj(CP_BB_BBOX, pre, ":bb:") for pre in ("bba-", "bbb-")]
+        payload_dup = F.concat(
+            _without_close(base),
+            *[part for o in objs for part in (F.lit(";"), o)], F.lit("]"))
+        payload_salvage = F.concat(
+            F.lit("[" + head(CP_SALV_BBOX) + "salv-"),
+            _md5_prefix(did, ":sv:", p, 8))
+        cls = _hex_draw(did, ":cp:", p, 1)
+        return _page(p, (
+            F.when(cls < CP_DUP_BELOW, payload_dup)
+            .when(cls < CP_REGEX_BELOW,
+                  F.regexp_replace(base, r'\},\{"', '};{"'))
+            .when(cls < CP_SALVAGE_BELOW, payload_salvage)
+            .otherwise(base)
+        ))
 
-            def _sl(salt: str) -> Column:
-                return F.substring(
-                    F.md5(F.concat(did_col, F.lit(salt), p.cast("string"))),
-                    1, 8)
-
-            cc_obj = _obj(CP_CC_BBOX, F.concat(F.lit("cc-"), _sl(":cc:")))
-            dup_txt = F.concat(F.lit("dup-"), _sl(":dp:"))
-            dup_objs = [
-                _obj((100, CP_DUP_Y0 + j * CP_DUP_STEP, 1600,
-                      CP_DUP_Y0 + j * CP_DUP_STEP + CP_DUP_H), dup_txt)
-                for j in range(5)
-            ]
-            bb_objs = [
-                _obj(CP_BB_BBOX, F.concat(F.lit(pre), _sl(":bb:")))
-                for pre in ("bba-", "bbb-")
-            ]
-            parts = [base.substr(F.lit(1), F.length(base) - 1),
-                     F.lit(";"), cc_obj, F.lit(";"), cc_obj]
-            for o in dup_objs + bb_objs:
-                parts += [F.lit(";"), o]
-            parts.append(F.lit("]"))
-            payload_dup = F.concat(*parts)
-
-            payload_regex = F.regexp_replace(base, r'\},\{"', '};{"')
-
-            x1, y1, x2, y2 = CP_SALV_BBOX
-            payload_salvage = F.concat(
-                F.lit('[{"bbox": [%d, %d, %d, %d], '
-                      '"category": "Text", "text": "salv-' % (x1, y1, x2, y2)),
-                _sl(":sv:"))
-
-            cls = _hex_draw(did_col, ":cp:", p, 1)
-            payload = (
-                F.when(cls < CP_DUP_BELOW, payload_dup)
-                .when(cls < CP_REGEX_BELOW, payload_regex)
-                .when(cls < CP_SALVAGE_BELOW, payload_salvage)
-                .otherwise(base)
-            )
-            return F.struct(
-                p.cast("int").alias("page_no"),
-                F.lit(PAGE_W).alias("width"),
-                F.lit(PAGE_H).alias("height"),
-                F.lit(1.0).alias("scale_factor"),
-                payload.alias("payload"),
-                F.lit(None).cast("string").alias("toc_json"),
-                F.lit(None).cast("string").alias("words_json"),
-            )
-
-        return build
-
-    pages = F.transform(
-        F.sequence(F.lit(0), n_pages - 1), _page(chunks, did))
-    return docs.select(
-        did.alias("doc_id"),
-        F.array().cast(_EMPTY_SPANS).alias("spans"),
-        pages.alias("pages"),
-        n_pages.alias("n_pages"),
-        F.lit("normal").alias("size_class"),
-    )
+    return _paginate(docs, doc_id_col, text_col, MP_CHUNKS_PER_PAGE, build)

@@ -231,6 +231,42 @@ def test_paged_runner_covers_one_based_page_numbering(spark, tmp_path):
     assert got_pages == {i + 1 for i in range(PAGES_PER_RANGE)}
 
 
+def test_paged_runner_keeps_zero_page_docs(spark, tmp_path):
+    """A document with ``pages=[]`` or ``pages=null`` has nothing to
+    parse but is still a document: the page runner must carry it (one
+    null-page row in prange 0) so the assembled output equals
+    ``pipeline.extract`` — n_pages=0, status ok — instead of dropping
+    it, and the lineage must count only real pages."""
+    base_doc = generate_doc(3, max_pages=2, malformed_frac=0.0)
+    pages = [(p["page_no"], p["width"], p["height"], p["scale_factor"],
+              p["payload"], p["toc_json"], p["words_json"])
+             for p in base_doc["pages"]]
+    docs = spark.createDataFrame([
+        ("paged-0", [], pages, len(pages), "normal"),
+        ("empty-0", [], [], 0, "normal"),
+        ("nullp-0", [], None, 0, "normal"),
+    ], schemas.INPUT)
+    base = str(tmp_path / "zp")
+    checkpoint.run_extraction_paged(
+        spark, docs, base, n_buckets=N_BUCKETS,
+        pages_per_range=PAGES_PER_RANGE, units_per_commit=8, run_id="zp")
+
+    cols = ["doc_id", "n_pages", "n_failed", "n_fallback", "n_spans",
+            "status", F.md5("markdown"), F.md5("markdown_nohf")]
+    want = sorted(pipeline.extract(docs).select(*cols).collect())
+    got = sorted(checkpoint.assemble_from_page_checkpoint(spark, base)
+                 .select(*cols).collect())
+    assert [r["doc_id"] for r in want] == ["empty-0", "nullp-0", "paged-0"]
+    assert got == want
+    lineage = checkpoint.read_page_lineage(spark, base)
+    assert lineage.agg(F.sum("n_pages")).collect()[0][0] == len(pages)
+
+    rerun = checkpoint.run_extraction_paged(
+        spark, docs, base, n_buckets=N_BUCKETS,
+        pages_per_range=PAGES_PER_RANGE, units_per_commit=8, run_id="zp2")
+    assert rerun["processed_units"] == 0
+
+
 def test_negative_page_no_fails_fast(spark, tmp_path):
     """array_max bounds the domain upward; a NEGATIVE page_no would get
     a prange outside the domain and be silently never parsed while the

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from dots_ocr_spark import pipeline
 from dots_ocr_spark import queries as Q
 from dots_ocr_spark.sources.ingest import (
+    interleaved_cleaner_probe,
     interleaved_multipage,
     interleaved_rich,
     interleaved_toc,
@@ -187,7 +188,8 @@ def test_wordgrain_tall_doc_keeps_every_word(spark, tmp_path):
 @pytest.mark.parametrize("mode", ["scatter"])
 @pytest.mark.parametrize(
     "gen", [interleaved_multipage, interleaved_rich, interleaved_toc,
-            interleaved_twocol, interleaved_wordgrain])
+            interleaved_twocol, interleaved_wordgrain,
+            interleaved_cleaner_probe])
 def test_generated_input_modes_agree(spark, mode, gen):
     """Both physical strategies must produce identical documents on the
     generated inputs (fused is the baseline) — including the word-grain

@@ -132,6 +132,22 @@ def probe_health(floor: float, retries: int, wait: int) -> dict:
     return {"healthy": False, "probe_dps": history}
 
 
+def contended(pair: dict) -> bool:
+    """A pair that never saw a clean probe, or whose efficiency exceeds
+    1 (super-linear scaling of a CPU-bound job means the N leg was
+    slowed by a co-tenant, not that the 4N leg was fast)."""
+    return not pair.get("probe_healthy") or pair["efficiency"] > 1
+
+
+def pick_best(pairs: list[dict]) -> dict:
+    """The reported pair: the uncontended pair with the lowest combined
+    wall. Picking the highest efficiency would favor pairs whose N leg
+    was slowed, biasing the estimate upward. Falls back to all pairs
+    when none is uncontended."""
+    return min([p for p in pairs if not contended(p)] or pairs,
+               key=lambda p: p["combined_sec"])
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=120000)
@@ -206,15 +222,15 @@ def main() -> None:
     same_shape = [p for p in history
                   if p.get("levels") == [args.n, args.xn]
                   and p.get("docs") == args.docs]
-    clean = [p for p in same_shape if p.get("probe_healthy")]
-    best = max(clean or same_shape, key=lambda p: p["efficiency"])
+    clean = [p for p in same_shape if not contended(p)]
+    best = pick_best(same_shape)
     cap_lo = max(p["N"]["docs_per_sec"] for p in same_shape)
     cap_hi = max(p["4N"]["docs_per_sec"] for p in same_shape)
     cap_eff = round((cap_hi / cap_lo) / (args.xn / args.n), 3)
     lo, hi, eff = best["N"], best["4N"], best["efficiency"]
 
     def fmt_pair(p):
-        tag = "clean" if p.get("probe_healthy") else "CONTENDED"
+        tag = "CONTENDED" if contended(p) else "clean"
         return (f"  - eff {p['efficiency']} ({tag}; N {p['N']['docs_per_sec']}"
                 f" d/s, 4N {p['4N']['docs_per_sec']} d/s, probe "
                 f"{p.get('probe_dps')})")
@@ -228,7 +244,7 @@ identical input parquet at two parallelism levels (the sandbox stand-in
 for N vs 4N executors per the driver's instruction — no real cluster
 available here).
 
-Best probe-clean pair on record for this shape:
+Lowest-combined-wall uncontended pair on record for this shape:
 
 | level | cores | docs | wall (s) | docs/sec |
 |---|---|---|---|---|
@@ -255,12 +271,14 @@ Method notes:
 - Health gate: each pair waits for a clean host window — a local[8]
   probe extract must reach ≥{args.probe_floor} docs/sec (healthy range
   2900-3700 on this VM) before the pair runs; pairs that never saw a
-  clean probe are marked CONTENDED and excluded from best-pair
-  selection (capability maxima still absorb their good legs).
+  clean probe, and pairs with efficiency > 1 (a slowed N leg), are
+  marked CONTENDED and excluded from best-pair selection; the reported
+  pair is the uncontended one with the lowest combined wall, not the
+  highest efficiency (capability maxima still absorb good legs).
 - This batch's pairs:
 {chr(10).join(fmt_pair(p) for p in pairs)}
 - Full history: BENCH/scaling_history.jsonl ({len(same_shape)} pairs of
-  this shape, {len(clean)} probe-clean).
+  this shape, {len(clean)} uncontended).
 - Split sizing: `spark.sql.files.maxPartitionBytes` =
   input_bytes/(cores×16) → ~16 task waves per core.
 - Produced by `python tools/bench_scaling.py --docs {args.docs} --n {args.n} --xn {args.xn}`.
