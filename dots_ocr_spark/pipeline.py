@@ -29,6 +29,7 @@ skew handling is the bounded page queue (configs.py:8-61).
 from __future__ import annotations
 
 import json
+from operator import itemgetter
 from typing import Iterator
 
 import pandas as pd
@@ -37,9 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
+from .spec.assemble import TASK_FAIL_THRESHOLD, assemble_page_results
 from .spec.page import process_page
-
-TASK_FAIL_THRESHOLD = 0.1
 
 
 def _parse_page(doc_id: str, page) -> dict:
@@ -63,6 +63,7 @@ def _parse_page(doc_id: str, page) -> dict:
 # --------------------------------------------------------------------------
 
 _PARSED_COLS = tuple(f.name for f in schemas.PARSED_PAGE.fields)
+_PAGE_SPAN_FIELDS = itemgetter(*(f.name for f in schemas.PAGE_SPAN.fields))
 
 
 def _parse_pages_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -86,7 +87,7 @@ def _parse_pages_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
             r = _parse_page(doc_id, page)
             out.append((
                 doc_id, int(page["page_no"]), r["status"], r["md"], r["md_nohf"],
-                [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]],
+                list(map(_PAGE_SPAN_FIELDS, r["spans"])),
                 len(r["cells"]),
             ))
         yield pd.DataFrame(out, columns=_PARSED_COLS)
@@ -185,12 +186,13 @@ def assemble_documents(parsed: DataFrame) -> DataFrame:
 
 _OUT_COLS = ("doc_id", "spans", "markdown", "markdown_nohf",
              "n_pages", "n_failed", "n_fallback", "n_spans", "status")
+_SPAN_FIELDS = itemgetter(*(f.name for f in schemas.SPAN.fields))
 
 
 def _out_row(d: dict) -> tuple:
     return (
         d["doc_id"],
-        [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]],
+        list(map(_SPAN_FIELDS, d["spans"])),
         d["markdown"], d["markdown_nohf"],
         d["n_pages"], d["n_failed"], d["n_fallback"], d["n_spans"], d["status"],
     )
@@ -200,8 +202,6 @@ def _extract_doc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     """mapInPandas worker, document grain: each input row carries the whole
     document (nested ``pages`` array), so parse + assembly complete inside
     the task — no shuffle anywhere in the job."""
-    from .spec.assemble import assemble_page_results
-
     for pdf in batches:
         out: list[tuple] = []
         for doc_id, pages in zip(pdf["doc_id"].tolist(), pdf["pages"].tolist()):

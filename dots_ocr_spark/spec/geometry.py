@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-
 IMAGE_FACTOR = 28
 MIN_PIXELS = 3136
 MAX_PIXELS = 11289600
@@ -103,31 +101,35 @@ def divide_bbox(bbox, scale_factor: float) -> list[int]:
     return [int(float(v) / scale_factor) for v in bbox]
 
 
+#: exact types of the JSON numbers; anything else takes the isinstance test
+_PLAIN_NUMBERS = (int, float)
+
+
 def bbox_is_legal(bbox) -> bool:
-    """F1 — list of 4 numbers with x0 < x1 and y0 < y1.
+    """F1 — list of 4 numbers (not bools) with x0 < x1 and y0 < y1.
 
     Ref: layout_utils.py:229-233.
     """
-    return (
-        isinstance(bbox, list)
-        and len(bbox) == 4
-        and all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in bbox)
-        and bbox[0] < bbox[2]
-        and bbox[1] < bbox[3]
-    )
+    if not isinstance(bbox, list) or len(bbox) != 4:
+        return False
+    x0, y0, x1, y1 = bbox
+    num = _PLAIN_NUMBERS
+    if not (type(x0) in num and type(y0) in num
+            and type(x1) in num and type(y1) in num):
+        for v in bbox:
+            if isinstance(v, bool) or not isinstance(v, (int, float)):
+                return False
+    return x0 < x1 and y0 < y1
 
 
 def clamp_bbox(bbox, width, height) -> list:
-    """P5 — clamp x2/y2 to the page extent (x1/y1 untouched).
+    """P5 — clamp x2/y2 of a legal bbox to the page extent (x1/y1
+    untouched).
 
     Ref: layout_utils.py:234-239.
     """
-    out = list(bbox)
-    if out[2] > width:
-        out[2] = width
-    if out[3] > height:
-        out[3] = height
-    return out
+    x0, y0, x1, y1 = bbox
+    return [x0, y0, width if x1 > width else x1, height if y1 > height else y1]
 
 
 def iou(box1, box2) -> float:
@@ -149,28 +151,40 @@ def iou(box1, box2) -> float:
 def exclude_overlap_boxes(cells: list[dict], iou_threshold: float = 0.9) -> list[dict]:
     """F5 — NMS-lite: for any pair with IoU > threshold drop the smaller box.
 
-    Ref: layout_service.py:59-85 (O(n²) pairwise; n is tens per page).
-    Order of survivors is preserved. Vectorized over the full pair matrix
-    — coordinates are small ints, so the numpy float64 ratios are
-    bit-identical to Python's int/int division and the drop decisions
-    match the scalar form exactly.
+    Ref: layout_service.py:59-85 (pairwise; n is tens per page). Order of
+    survivors is preserved, and a dropped box still drops the boxes it
+    beats (no cascade). Sort-and-sweep on ``y1``: once a later box starts
+    at or below this box's ``y2`` the pair has no vertical overlap, so its
+    IoU is 0 (never above a non-negative threshold), and neither can any
+    box after it. Pairs of equal area never drop either box, so they are
+    skipped. Coordinates go through ``float()`` first, so every ratio is
+    the float64 value a numpy pair matrix over the same boxes gives.
     """
     n = len(cells)
     if n <= 1:
         return list(cells)
-    b = np.array([c["bbox"] for c in cells], dtype=np.float64)
-    areas = (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])
-    x1 = np.maximum(b[:, None, 0], b[None, :, 0])
-    y1 = np.maximum(b[:, None, 1], b[None, :, 1])
-    x2 = np.minimum(b[:, None, 2], b[None, :, 2])
-    y2 = np.minimum(b[:, None, 3], b[None, :, 3])
-    inter = np.maximum(x2 - x1, 0.0) * np.maximum(y2 - y1, 0.0)
-    union = areas[:, None] + areas[None, :] - inter
-    iou_m = np.divide(inter, union, out=np.zeros_like(inter),
-                      where=union > 0)
-    overlap = iou_m > iou_threshold
-    np.fill_diagonal(overlap, False)
-    remove = (overlap & (areas[:, None] < areas[None, :])).any(axis=1)
+    if iou_threshold < 0:
+        raise ValueError(f"iou_threshold must be >= 0, got {iou_threshold}")
+    boxes = []
+    for idx, c in enumerate(cells):
+        x1, y1, x2, y2 = map(float, c["bbox"])
+        boxes.append((y1, x1, x2, y2, (x2 - x1) * (y2 - y1), idx))
+    boxes.sort()
+    remove = [False] * n
+    for k, (ay1, ax1, ax2, ay2, a_area, i) in enumerate(boxes):
+        for by1, bx1, bx2, by2, b_area, j in boxes[k + 1:]:
+            if by1 >= ay2:
+                break
+            if a_area == b_area:
+                continue
+            inter = (max(min(ax2, bx2) - max(ax1, bx1), 0.0)
+                     * max(min(ay2, by2) - by1, 0.0))
+            union = a_area + b_area - inter
+            if union > 0 and inter / union > iou_threshold:
+                if a_area < b_area:
+                    remove[i] = True
+                elif b_area < a_area:
+                    remove[j] = True
     return [c for idx, c in enumerate(cells) if not remove[idx]]
 
 

@@ -70,11 +70,10 @@ def _validate_cells(cells, width, height):
     for cell in cells:
         if not isinstance(cell, dict) or "bbox" not in cell or "category" not in cell:
             return None
-        if not geometry.bbox_is_legal(cell["bbox"]):
+        bbox = cell["bbox"]
+        if not geometry.bbox_is_legal(bbox):
             return None
-        c = dict(cell)
-        c["bbox"] = geometry.clamp_bbox(c["bbox"], width, height)
-        out.append(c)
+        out.append({**cell, "bbox": geometry.clamp_bbox(bbox, width, height)})
     return out
 
 
@@ -173,24 +172,17 @@ def process_page(
     out_height = int(float(height) / scale_factor)
 
     # 7. render (A3/F3) ---------------------------------------------------
-    md = render.cells_to_markdown(cells)
-    md_nohf = render.cells_to_markdown(cells, no_page_hf=True)
+    md, md_nohf, texts = render.cells_to_markdown(cells)
 
     # 8. span emission -----------------------------------------------------
     spans = []
-    for c in cells:
+    for c, text in zip(cells, texts):
         category = c.get("category", "")
         if category == PICTURE:
             ref = c.get("media_ref") or media_ref_for(doc_id, page_no, c["bbox"])
             spans.append({"kind": category.lower(), "text": None, "media_ref": ref})
         else:
-            spans.append(
-                {
-                    "kind": category.lower(),
-                    "text": render.render_cell_markdown(c),
-                    "media_ref": None,
-                }
-            )
+            spans.append({"kind": category.lower(), "text": text, "media_ref": None})
 
     return {
         "status": status,

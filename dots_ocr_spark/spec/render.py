@@ -23,15 +23,16 @@ def render_cell_markdown(cell: dict) -> str:
     return clean_text(text)
 
 
-def cells_to_markdown(cells: list[dict], no_page_hf: bool = False) -> str:
-    """Fold ordered cells into a page Markdown string.
+def cells_to_markdown(cells: list[dict]) -> tuple[str, str, list[str]]:
+    """Fold ordered cells into the page Markdown strings, rendering each
+    cell once.
 
-    Ref: format_transformer.py:141-179. ``no_page_hf=True`` drops
-    Page-header/Page-footer cells (F3, the ``_nohf.md`` variant).
+    Ref: format_transformer.py:141-179. Returns ``(md, md_nohf, texts)``:
+    ``md_nohf`` drops Page-header/Page-footer cells (F3, the ``_nohf.md``
+    variant) and ``texts[i]`` is cell ``i``'s rendered text.
     """
-    items = []
-    for cell in cells:
-        if no_page_hf and cell.get("category") in PAGE_HF_CATEGORIES:
-            continue
-        items.append(render_cell_markdown(cell))
-    return "\n\n".join(items)
+    texts = [render_cell_markdown(cell) for cell in cells]
+    md = "\n\n".join(texts)
+    md_nohf = "\n\n".join(t for cell, t in zip(cells, texts)
+                           if cell.get("category") not in PAGE_HF_CATEGORIES)
+    return md, md_nohf, texts

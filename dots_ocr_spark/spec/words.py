@@ -17,11 +17,16 @@ reproduces the clip semantics at word grain.
 
 from __future__ import annotations
 
+from operator import itemgetter
+
 from .textnorm import collapse_single_newlines
 
 #: categories whose text is NOT taken from the PDF layer
 #: (ocr_task.py:562 — Table/Picture/Formula keep their payload content)
 SKIP_CLIP_CATEGORIES = ("Table", "Picture", "Formula")
+
+#: (block_no, line_no, word_no) — the fitz text order of a word
+_WORD_ORDER = itemgetter(5, 6, 7)
 
 
 def normalize_words(words: list) -> list:
@@ -48,11 +53,12 @@ def _assemble(sel: list) -> str:
     for w in sel:
         key = (w[5], w[6])
         if key != cur_key:
-            lines.append([])
             cur_key = key
-        lines[-1].append(w[4])
-    raw = "\n".join(" ".join(line) for line in lines)
-    return collapse_single_newlines(raw)
+            line = [w[4]]
+            lines.append(line)
+        else:
+            line.append(w[4])
+    return collapse_single_newlines("\n".join(map(" ".join, lines)))
 
 
 def clip_text(words: list, bbox: list) -> str:
@@ -67,7 +73,7 @@ def clip_text(words: list, bbox: list) -> str:
         w for w in words
         if w[0] >= x1 and w[1] >= y1 and w[2] <= x2 and w[3] <= y2
     ]
-    sel.sort(key=lambda w: (w[5], w[6], w[7]))
+    sel.sort(key=_WORD_ORDER)
     return _assemble(sel)
 
 
@@ -87,7 +93,7 @@ def fill_cell_texts(cells: list[dict], words: list,
     never drop a selected word, and block/word order is preserved.
     (A numpy mask variant was measured slower at typical ~200-word
     pages, where array construction overhead exceeds the loop saved.)"""
-    sw = sorted(normalize_words(words), key=lambda w: (w[5], w[6], w[7]))
+    sw = sorted(normalize_words(words), key=_WORD_ORDER)
     blocks: list[list] = []  # [bx1, by1, bx2, by2, block_no, [words]]
     for w in sw:
         if not blocks or blocks[-1][4] != w[5]:

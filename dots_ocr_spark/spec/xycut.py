@@ -31,6 +31,8 @@ per page inside an Arrow batch.
 
 from __future__ import annotations
 
+from bisect import bisect_left
+
 HEADER_CATEGORY = "Page-header"
 FOOTER_CATEGORY = "Page-footer"
 
@@ -45,24 +47,23 @@ def _merged_gaps(intervals: list[tuple[float, float]]) -> list[float]:
     for lo, hi in ivs[1:]:
         if lo > cur_end:
             cuts.append((cur_end + lo) / 2.0)
-        cur_end = max(cur_end, hi)
+        if hi > cur_end:
+            cur_end = hi
     return cuts
 
 
 def _split(indices: list[int], boxes, axis: int) -> list[list[int]]:
     """Split indices into groups along axis (0=x vertical cut, 1=y
-    horizontal cut). Returns [indices] when no gap exists."""
+    horizontal cut). Returns [indices] when no gap exists. A box's group
+    is the number of cuts below its low edge; the cuts never descend, so
+    ``bisect_left`` counts them."""
     intervals = [(boxes[i][axis], boxes[i][axis + 2]) for i in indices]
     cuts = _merged_gaps(intervals)
     if not cuts:
         return [indices]
     groups: list[list[int]] = [[] for _ in range(len(cuts) + 1)]
-    for i in indices:
-        lo = boxes[i][axis]
-        g = 0
-        while g < len(cuts) and lo > cuts[g]:
-            g += 1
-        groups[g].append(i)
+    for i, (lo, _) in zip(indices, intervals):
+        groups[bisect_left(cuts, lo)].append(i)
     return [g for g in groups if g]
 
 
@@ -71,19 +72,17 @@ def _xycut(indices: list[int], boxes, out: list[int]) -> None:
         out.extend(indices)
         return
 
-    # 1. vertical cut (left-to-right columns) — column-priority
-    cols = _split(indices, boxes, axis=0)
-    if len(cols) > 1:
-        for col in cols:
-            _xycut(col, boxes, out)
-        return
-
-    # 2. horizontal cut (top-to-bottom bands)
-    bands = _split(indices, boxes, axis=1)
-    if len(bands) > 1:
-        for band in bands:
-            _xycut(band, boxes, out)
-        return
+    # 1. vertical cut (left-to-right columns) — column-priority,
+    # 2. else horizontal cut (top-to-bottom bands)
+    for axis in (0, 1):
+        groups = _split(indices, boxes, axis)
+        if len(groups) > 1:
+            for g in groups:
+                if len(g) == 1:
+                    out.append(g[0])
+                else:
+                    _xycut(g, boxes, out)
+            return
 
     # 3. peel the top-left-most box and recurse
     first = min(indices, key=lambda i: (boxes[i][1], boxes[i][0], i))

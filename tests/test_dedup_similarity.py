@@ -1,6 +1,8 @@
 """Engine-parity gate for the training-data-pipeline operators: every
 Spark implementation must match its DuckDB oracle exactly at sf0.001."""
 
+import os
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +12,8 @@ from dots_ocr_spark import similarity as S
 from dots_ocr_spark import textops as TX
 
 SF = "/root/testdata/sf0.001"
+#: the corpus tools/check_correctness.py checks by default
+SF_CHECK = os.path.join(os.path.dirname(SF), "sf0.01")
 
 
 @pytest.fixture(scope="module")
@@ -90,6 +94,38 @@ def test_connected_components_converges_past_round_bound(spark):
     exp = {v: find(v) for v in got}
     assert got == exp
     assert got[130] == 100 and got[502] == 500
+
+
+def test_fixed_round_cc_oracles_reach_fixpoint_at_sf0_01():
+    """The CC oracles stop after COMPONENT_ROUNDS rounds; the Spark side
+    runs to a fixpoint. On the sf0.01 corpus the fixed-round labels must
+    already be the fixpoint labels, and the survivors those of the
+    fixpoint components."""
+    c = duckdb.connect()
+    c.execute("CREATE VIEW documents AS SELECT * FROM "
+              f"'{SF_CHECK}/documents.parquet'")
+    pairs = c.execute(
+        f"SELECT doc_i, doc_j FROM ({D.ORACLE_JACCARD_PAIRS})").fetchall()
+    assert pairs, "the sf0.01 corpus must have near-dup pairs"
+    nbrs: dict = {}
+    for a, b in pairs:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    labels = {v: v for v in nbrs}
+    rounds = 0
+    while True:
+        new = {v: min([labels[v]] + [labels[u] for u in nbrs[v]])
+               for v in labels}
+        if new == labels:
+            break
+        labels, rounds = new, rounds + 1
+    assert rounds <= D.COMPONENT_ROUNDS
+
+    assert dict(c.execute(D.ORACLE_NEARDUP_COMPONENTS).fetchall()) == labels
+    reps = c.execute("SELECT min(doc_id), md5(text) FROM documents "
+                     "GROUP BY md5(text)").fetchall()
+    survivors = {(d, h) for d, h in reps if labels.get(d, d) == d}
+    assert set(c.execute(D.ORACLE_DEDUP_SURVIVORS_CC).fetchall()) == survivors
 
 
 def test_dedup_survivors_cc_matches_oracle(spark, con):
