@@ -10,9 +10,13 @@ separately; here we only need the plan to execute fully). Timing is
 per-query wall clock; ``value`` is the total.
 
 Extra fields (informational, not part of the driver contract):
-``docs_per_sec`` — end-to-end extraction throughput of the flagship
-pipeline, the authoritative BASELINE.json metric (see BENCH/BASELINE.md
-for the two-parallelism scaling run produced by tools/bench_scaling.py).
+``extract_docs_per_sec`` — end-to-end extraction throughput of the
+flagship pipeline, the authoritative BASELINE.json metric (see
+BENCH/BASELINE.md for the two-parallelism scaling run produced by
+tools/bench_scaling.py), the pre-suite probe and the contended queries.
+The per-query row counts and the timing rule go to
+``BENCH/bench_detail.json``, so the stdout line stays short enough for
+a 2,000-char log tail.
 """
 
 from __future__ import annotations
@@ -22,6 +26,9 @@ import os
 import re
 import sys
 import time
+
+BENCH_DETAIL = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "BENCH", "bench_detail.json")
 
 
 def build_spark(cpus: int):
@@ -36,6 +43,7 @@ def build_spark(cpus: int):
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
 
@@ -84,9 +92,42 @@ HEADLINE = [
 ]
 
 
+def build_record(timings: dict[str, float], rows: dict[str, int], sf: float,
+                 cpus: int, probe_dps: float,
+                 contended: list[str]) -> tuple[dict, dict]:
+    """(stdout record, detail record) of one suite run."""
+    total = round(sum(timings.values()), 3)
+    # throughput from MEASURED counts (extract_docs is one row per doc),
+    # never from a duplicated sizing constant
+    flagship_t = timings.get("extract_docs", 0.0) or 1e-9
+    out = {
+        "metric": "headline query suite wall-clock (extraction + dedup + analytics)",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "cpus": cpus,
+        "probe_docs_per_sec": probe_dps,
+        "contended_queries": contended,
+        "extract_docs_per_sec": round(rows.get("extract_docs", 0) / flagship_t, 2),
+    }
+    detail = {
+        "sf": sf,
+        "cpus": cpus,
+        "timing": "best-of-2 per query, best-of-4 when >1.5x the "
+                  "committed reference best (host co-tenant guard)",
+        "extract_spans_rows": rows.get("extract_spans", 0),
+        # per-query output row counts: freezes the input contract — a
+        # row-count shift flags an input change that would make timings
+        # non-comparable across rounds
+        "query_rows": rows,
+    }
+    return out, detail
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.1
 
@@ -158,28 +199,9 @@ def main() -> None:
             contended.append(name)
         timings[name] = round(best, 3)
 
-    total = round(sum(timings.values()), 3)
-    # throughput from MEASURED counts (extract_docs is one row per doc),
-    # never from a duplicated sizing constant
-    flagship_t = timings.get("extract_docs", 0.0) or 1e-9
-    out = {
-        "metric": "headline query suite wall-clock (extraction + dedup + analytics)",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "cpus": cpus,
-        "timing": "best-of-2 per query, best-of-4 when >1.5x the "
-                  "committed reference best (host co-tenant guard)",
-        "probe_docs_per_sec": probe_dps,
-        "contended_queries": contended,
-        "extract_spans_rows": rows.get("extract_spans", 0),
-        "extract_docs_per_sec": round(rows.get("extract_docs", 0) / flagship_t, 2),
-        # per-query output row counts: freezes the input contract — a
-        # row-count shift flags an input change that would make timings
-        # non-comparable across rounds
-        "query_rows": rows,
-    }
+    out, detail = build_record(timings, rows, sf, cpus, probe_dps, contended)
+    with open(BENCH_DETAIL, "w") as f:
+        json.dump(detail, f, indent=1)
     print(json.dumps(out))
     spark.stop()
 

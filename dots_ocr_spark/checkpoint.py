@@ -1,32 +1,59 @@
-"""Resumable extraction runs: per-partition lineage + metrics + idempotent
+"""Resumable extraction runs: per-unit lineage + metrics + idempotent
 restart (north-rule X6; reference analog: MD5-of-input + output-existence
-skip at /root/reference/app/dotsocr_service.py:253-348 and the S3
-page-index resume scan at /root/reference/app/utils/storage.py:199-228).
+skip at the reference's ``app/dotsocr_service.py:253-348`` and its S3
+page-index resume scan at ``app/utils/storage.py:199-228``).
 
 Design (Iceberg semantics approximated on plain parquet — the container
 ships no Iceberg catalog; on a real deployment swap the two writers for
-``MERGE INTO`` on an Iceberg table and this module's logic is unchanged):
+``MERGE INTO`` on an Iceberg table and this module's logic is unchanged).
+Two runners share one commit protocol and differ only in their work unit:
 
-  * Work unit = **bucket**: ``pmod(xxhash64(doc_id), n_buckets)``. Stable
-    across runs, independent of input file layout.
-  * Output table: parquet partitioned by ``bucket``, written with dynamic
-    partition overwrite — re-processing a bucket atomically replaces its
-    directory, so a crash mid-bucket can never duplicate rows.
-  * Lineage table: one row per completed bucket ``(bucket, run_id,
-    n_docs, n_spans, n_failed_pages, completed_at_unix)``, appended AFTER
-    the bucket's output commit. Crash between the two writes ⇒ the bucket
-    is simply re-done (idempotent), never skipped-but-missing.
-  * Resume = left-anti join of the bucket domain against the lineage
-    table: completed buckets are pruned BEFORE any Python work runs — at
-    the scan, via partition-pruning-friendly ``bucket IN (...)`` when the
-    remaining set is small, else the anti-join.
-  * Metrics: per-bucket page/doc counters live in the lineage rows;
-    ``metrics_summary`` aggregates them (A4/A5 analog).
+  * ``run_extraction`` — unit = **bucket**, ``pmod(xxhash64(doc_id),
+    n_buckets)``: stable across runs, independent of input file layout.
+    Output is the extracted document table (``output/``), lineage
+    ``_lineage/`` (:data:`LINEAGE_SCHEMA`).
+  * ``run_extraction_paged`` — unit = **(bucket, prange)**, ``prange =
+    page_no // pages_per_range``. The bucket runner recomputes a WHOLE
+    bucket after a mid-bucket crash — fine for uniform corpora, wasteful
+    when one document holds 10k pages (the measured scatter-win regime,
+    tools/bench_scatter.py). This runner is the Spark analog of the
+    reference's page-index resume scan: a crash mid-giant-doc resumes at
+    the first uncommitted page range of that document instead of its
+    first page. Output is PARSED PAGE grain (``schemas.PARSED_PAGE`` +
+    the unit columns, ``pages/``), lineage ``_page_lineage/``
+    (:data:`PAGE_LINEAGE_SCHEMA`). A doc with no (or null) pages is one
+    null-page row in prange 0, as in the scatter pipeline, so assembly
+    still emits it. The unit domain is data-derived (bucket b has ranges
+    0..max(max_page_no // r) over its docs, range 0 for a doc with no
+    pages) — a bounded n_buckets-row collect, recomputed identically on
+    every resume. ``assemble_from_page_checkpoint`` is the scatter
+    pipeline's stage 2 (pure-JVM ``assemble_documents``) over the
+    completed page table.
 
-Buckets are processed in groups of ``buckets_per_commit`` to bound commit
-frequency (one Spark job + one lineage append per group) — the knob
-trades restart granularity against job-scheduling overhead, exactly like
-Iceberg snapshot batching.
+The lineage schema is the layout: the columns before ``run_id`` are the
+unit keys (and the output's partition columns), the ones between it and
+``completed_at_unix`` are the unit's counters. The commit protocol, per
+group of ``*_per_commit`` units (one Spark job + one lineage append per
+group — the knob trades restart granularity against job-scheduling
+overhead, exactly like Iceberg snapshot batching):
+
+  1. Output commit: the group's frame is written partitioned by the unit
+     keys with dynamic partition overwrite — re-processing a unit
+     atomically replaces its directory, so a crash mid-group can never
+     duplicate rows.
+  2. Lineage commit, AFTER the output is durable: the group's counters
+     are read back from the written partitions and left-joined onto the
+     group's unit list, zero-filled, so EVERY unit of the group gets one
+     lineage row — an empty unit writes no partition and would otherwise
+     be reprocessed on every resume. A crash between the two writes ⇒
+     the unit is simply re-done (idempotent), never skipped-but-missing.
+
+Resume = the set of units in the lineage table, pruned from the domain
+BEFORE any Python work runs. A missing lineage table means nothing was
+committed; any other lineage read error propagates, since resuming past
+it would silently recompute (or skip) committed work. Metrics: per-unit
+counters live in the lineage rows; ``metrics_summary`` /
+``page_metrics_summary`` roll them up per run (A4/A5 analog).
 """
 
 from __future__ import annotations
@@ -35,7 +62,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.errors import AnalysisException
@@ -52,6 +79,20 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("completed_at_unix", T.DoubleType()),
 ])
 
+PAGE_LINEAGE_SCHEMA = T.StructType([
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("prange", T.IntegerType()),
+    T.StructField("run_id", T.StringType()),
+    T.StructField("n_pages", T.LongType()),
+    T.StructField("n_failed_pages", T.LongType()),
+    T.StructField("n_fallback_pages", T.LongType()),
+    T.StructField("completed_at_unix", T.DoubleType()),
+])
+
+#: encodes (bucket, prange) into one long for an IN-list filter; no
+#: corpus has 2^40 pages per document, so the encoding never collides
+_PR_ENC = 1 << 40
+
 
 def _lineage_path(base: str) -> str:
     return os.path.join(base, "_lineage")
@@ -61,15 +102,99 @@ def _output_path(base: str) -> str:
     return os.path.join(base, "output")
 
 
+def _page_lineage_path(base: str) -> str:
+    return os.path.join(base, "_page_lineage")
+
+
+def _pages_path(base: str) -> str:
+    return os.path.join(base, "pages")
+
+
+def _bucket(n_buckets: int) -> Column:
+    """The bucket of a row's ``doc_id``."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
+def _layout(columns: list[str]) -> tuple[list[str], list[str]]:
+    """(unit keys, counters) of a lineage column list."""
+    i = columns.index("run_id")
+    return columns[:i], columns[i + 1:-1]
+
+
+def _in_units(keys: list[str], group: list[tuple]) -> Column:
+    """``unit IN (group)`` over the unit-key columns; a (bucket, prange)
+    unit is matched as one ``_PR_ENC``-encoded long."""
+    if len(keys) == 1:
+        return F.col(keys[0]).isin([u for u, in group])
+    return (F.col("bucket").cast("long") * _PR_ENC + F.col("prange")).isin(
+        [b * _PR_ENC + p for b, p in group])
+
+
+def _completed_units(read, spark: SparkSession, base: str) -> set[tuple]:
+    """Unit-key tuples committed by any previous run (the resume scan)."""
+    try:
+        lineage = read(spark, base)
+    except AnalysisException:
+        return set()  # no lineage table yet: nothing committed
+    keys, _ = _layout(lineage.columns)
+    return {tuple(r) for r in lineage.select(*keys).distinct().collect()}
+
+
+def _commit_groups(
+    spark: SparkSession,
+    schema: T.StructType,
+    output: str,
+    lineage: str,
+    todo: list[tuple],
+    per_commit: int,
+    run_id: str,
+    build,
+    counts: list[Column],
+) -> None:
+    """Commit ``todo`` in groups of ``per_commit`` units (the protocol in
+    the module docstring). ``build(group)`` returns the frame to write,
+    carrying the unit-key columns of ``schema``; ``counts`` aggregate the
+    written rows into the schema's counters, in schema order."""
+    keys, counters = _layout(schema.fieldNames())
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    for lo in range(0, len(todo), per_commit):
+        group = todo[lo:lo + per_commit]
+        # 1) output commit: dynamic overwrite replaces exactly these units
+        build(group).write.mode("overwrite").partitionBy(*keys).parquet(output)
+        # 2) lineage commit, every unit of the group zero-filled
+        try:
+            got = spark.read.parquet(output).where(_in_units(keys, group)) \
+                .groupBy(*keys) \
+                .agg(*[c.alias(n) for c, n in zip(counts, counters)])
+        except AnalysisException:
+            # an all-empty commit group writes no part files at all, so
+            # parquet schema inference fails (UNABLE_TO_INFER_SCHEMA /
+            # PATH_NOT_FOUND) — every unit gets zeros. Only analysis
+            # errors mean "no output"; IO errors must surface, otherwise
+            # a transient read failure would silently commit zero-count
+            # lineage and mark unprocessed units complete.
+            got = spark.createDataFrame(
+                [], T.StructType([schema[n] for n in keys + counters]))
+        spark.createDataFrame(
+            group, T.StructType([schema[k] for k in keys])
+        ).join(got, keys, "left").select(
+            *keys,
+            F.lit(run_id).alias("run_id"),
+            *[F.coalesce(n, F.lit(0)).cast("long").alias(n) for n in counters],
+            F.lit(time.time()).alias("completed_at_unix"),
+        ).write.mode("append").parquet(lineage)
+
+
+def _rollup(lineage: DataFrame, n_units: str) -> DataFrame:
+    """Run-level sums of a lineage table's counters."""
+    _, counters = _layout(lineage.columns)
+    return lineage.groupBy("run_id").agg(
+        F.count("*").alias(n_units), *[F.sum(c).alias(c) for c in counters])
+
+
 def completed_buckets(spark: SparkSession, base: str) -> set[int]:
     """Buckets already committed by any previous run (the resume scan)."""
-    path = _lineage_path(base)
-    try:
-        rows = spark.read.schema(LINEAGE_SCHEMA).parquet(path) \
-            .select("bucket").distinct().collect()
-    except Exception:
-        return set()
-    return {r["bucket"] for r in rows}
+    return {b for b, in _completed_units(read_lineage, spark, base)}
 
 
 def run_extraction(
@@ -107,10 +232,9 @@ def run_extraction(
     group holding a doc of another bucket raises ``ValueError``.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     done = completed_buckets(spark, base)
-    todo = [b for b in range(n_buckets) if b not in done]
+    todo = [(b,) for b in range(n_buckets) if b not in done]
 
     if bucket_col is not None:
         # Domain guard: a doc whose bucket_col lies outside
@@ -127,15 +251,13 @@ def run_extraction(
                 "and would be silently dropped. The input's partition "
                 "layout disagrees with this run's n_buckets.")
     else:
-        bucketed = docs.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+        bucketed = docs.withColumn("bucket", _bucket(n_buckets))
 
-    for lo in range(0, len(todo), buckets_per_commit):
-        group = todo[lo:lo + buckets_per_commit]
+    def build(group):
+        buckets = [b for b, in group]
         if bucket_col is not None:
             # partition predicate: the scan prunes to the group's files
-            chunk = docs.where(F.col(bucket_col).isin(group))
+            chunk = docs.where(F.col(bucket_col).isin(buckets))
             # Layout guard: the fast path trusts that bucket_col follows
             # pmod(xxhash64(doc_id), n_buckets). If the input was written
             # with a different n_buckets or hash, this group would parse
@@ -146,71 +268,29 @@ def run_extraction(
             # files only (one cheap JVM-only job, no Python work) and
             # refuse to commit on any mismatch.
             stray = chunk.where(
-                ~F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
-                .cast("int").isin(group)).limit(1).count()
+                ~_bucket(n_buckets).isin(buckets)).limit(1).count()
             if stray:
                 raise ValueError(
                     f"bucket_col={bucket_col!r} does not follow "
                     f"pmod(xxhash64(doc_id), {n_buckets}): commit group "
-                    f"{group} selected docs whose recomputed bucket lies "
+                    f"{buckets} selected docs whose recomputed bucket lies "
                     "outside the group. The input's partition layout "
                     "disagrees with this run's (n_buckets, hash) — "
                     "refusing to commit rather than silently lose docs.")
             chunk = chunk.drop(bucket_col)
         else:
-            chunk = bucketed.where(F.col("bucket").isin(group)).drop("bucket")
-        out = pipeline.extract(chunk, mode=mode).withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
-        # 1) output commit: dynamic overwrite replaces exactly these buckets
-        out.write.mode("overwrite").partitionBy("bucket") \
-            .parquet(_output_path(base))
-        # 2) lineage commit (after the data is durable). EVERY bucket in
-        # the commit group gets a lineage row — an empty bucket writes no
-        # output partition, so deriving lineage from written partitions
-        # alone would leave it permanently "incomplete" and reprocessed on
-        # every resume (never a no-op on sparse inputs). Left-join the
-        # group domain against the written counts, defaulting to zeros.
-        try:
-            counts = (
-                spark.read.parquet(_output_path(base))
-                .where(F.col("bucket").isin(group))
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum("n_spans").cast("long").alias("n_spans"),
-                    F.sum("n_failed").cast("long").alias("n_failed_pages"),
-                    F.sum("n_fallback").cast("long").alias("n_fallback_pages"),
-                )
-            )
-        except AnalysisException:
-            # an all-empty commit group writes no part files at all, so
-            # parquet schema inference fails (UNABLE_TO_INFER_SCHEMA /
-            # PATH_NOT_FOUND) — every bucket gets zeros. Only analysis
-            # errors mean "no output"; IO errors must surface, otherwise
-            # a transient read failure would silently commit zero-count
-            # lineage and mark unprocessed buckets complete.
-            counts = spark.createDataFrame(
-                [], "bucket int, n_docs long, n_spans long, "
-                    "n_failed_pages long, n_fallback_pages long")
-        group_df = spark.createDataFrame(
-            [(int(b),) for b in group], "bucket int")
-        lineage = (
-            group_df.join(counts, "bucket", "left")
-            .select(
-                "bucket",
-                F.lit(run_id).alias("run_id"),
-                F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-                F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
-                F.coalesce("n_failed_pages", F.lit(0)).cast("long")
-                .alias("n_failed_pages"),
-                F.coalesce("n_fallback_pages", F.lit(0)).cast("long")
-                .alias("n_fallback_pages"),
-                F.lit(time.time()).alias("completed_at_unix"),
-            )
-        )
-        lineage.write.mode("append").parquet(_lineage_path(base))
+            chunk = bucketed.where(F.col("bucket").isin(buckets)).drop("bucket")
+        return pipeline.extract(chunk, mode=mode) \
+            .withColumn("bucket", _bucket(n_buckets))
 
+    _commit_groups(
+        spark, LINEAGE_SCHEMA, _output_path(base), _lineage_path(base),
+        todo, buckets_per_commit, run_id, build, [
+            F.count("*"),
+            F.sum("n_spans").cast("long"),
+            F.sum("n_failed").cast("long"),
+            F.sum("n_fallback").cast("long"),
+        ])
     return {
         "run_id": run_id,
         "processed_buckets": len(todo),
@@ -222,66 +302,9 @@ def read_output(spark: SparkSession, base: str) -> DataFrame:
     return spark.read.parquet(_output_path(base))
 
 
-# --------------------------------------------------------------------------
-# page-granular checkpointing (giant-document / scatter-mode resume)
-# --------------------------------------------------------------------------
-#
-# The bucket-grain runner above recomputes a WHOLE bucket after a
-# mid-bucket crash — fine for uniform corpora, wasteful when one
-# document holds 10k pages (the measured scatter-win regime,
-# tools/bench_scatter.py). This runner checkpoints at (bucket,
-# page-range) grain, the Spark analog of the reference's page-index
-# resume scan (/root/reference/app/utils/storage.py:199-228): a crash
-# mid-giant-doc resumes at the first uncommitted page range of that
-# document instead of its first page.
-#
-#   * Work unit = (bucket, prange): bucket = pmod(xxhash64(doc_id), B),
-#     prange = page_no // pages_per_range. Stable across runs. A doc
-#     with no (or null) pages is one null-page row in prange 0, as in
-#     the scatter pipeline, so assembly still emits it.
-#   * Output = PARSED PAGE grain (schemas.PARSED_PAGE + the unit
-#     columns), parquet partitioned by (bucket, prange) with dynamic
-#     overwrite — same atomic-replace guarantee as the bucket runner.
-#   * The unit domain is data-derived (bucket b has ranges
-#     0..max(max_page_no // r) over its docs, range 0 for a doc with
-#     no pages) — a bounded n_buckets-row collect, recomputed
-#     identically on every resume.
-#   * Document assembly (``assemble_from_page_checkpoint``) is the
-#     scatter pipeline's stage 2 (pure-JVM ``assemble_documents``) over
-#     the completed page table.
-
-PAGE_LINEAGE_SCHEMA = T.StructType([
-    T.StructField("bucket", T.IntegerType()),
-    T.StructField("prange", T.IntegerType()),
-    T.StructField("run_id", T.StringType()),
-    T.StructField("n_pages", T.LongType()),
-    T.StructField("n_failed_pages", T.LongType()),
-    T.StructField("n_fallback_pages", T.LongType()),
-    T.StructField("completed_at_unix", T.DoubleType()),
-])
-
-#: encodes (bucket, prange) into one long for an IN-list filter; no
-#: corpus has 2^40 pages per document, so the encoding never collides
-_PR_ENC = 1 << 40
-
-
-def _page_lineage_path(base: str) -> str:
-    return os.path.join(base, "_page_lineage")
-
-
-def _pages_path(base: str) -> str:
-    return os.path.join(base, "pages")
-
-
 def completed_page_units(spark: SparkSession, base: str) -> set[tuple[int, int]]:
     """(bucket, prange) units committed by any previous run."""
-    try:
-        rows = spark.read.schema(PAGE_LINEAGE_SCHEMA) \
-            .parquet(_page_lineage_path(base)) \
-            .select("bucket", "prange").distinct().collect()
-    except Exception:
-        return set()
-    return {(r["bucket"], r["prange"]) for r in rows}
+    return _completed_units(read_page_lineage, spark, base)
 
 
 def _prange(pages_per_range: int):
@@ -296,9 +319,7 @@ def _page_grain(docs: DataFrame, n_buckets: int, pages_per_range: int) -> DataFr
     ``explode_outer`` keeps a document with no (or null) pages as one
     null-page row (``pipeline.parse_pages`` does the same)."""
     return (
-        docs.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+        docs.withColumn("bucket", _bucket(n_buckets))
         .select("doc_id", "bucket", F.explode_outer("pages").alias("page"))
         .select("doc_id", "bucket", "page.*")
         .withColumn("prange", _prange(pages_per_range))
@@ -322,7 +343,6 @@ def run_extraction_paged(
     ranges crashed (the giant-doc case the bucket runner recomputes).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # data-derived unit domain: one row per bucket → bounded collect.
     # Ranges are derived from the MAX page_no actually present (not from
@@ -333,8 +353,7 @@ def run_extraction_paged(
     # i.e. pages silently dropped with no resumable trace.
     dom = (
         docs.select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-            .alias("bucket"),
+            _bucket(n_buckets).alias("bucket"),
             F.when(
                 F.size("pages") > 0,
                 F.floor(F.array_max("pages.page_no") / F.lit(pages_per_range))
@@ -367,54 +386,21 @@ def run_extraction_paged(
     todo = sorted(all_units - done)
 
     pages = _page_grain(docs, n_buckets, pages_per_range)
-    unit_key = F.col("bucket").cast("long") * _PR_ENC + F.col("prange")
+    keys, _ = _layout(PAGE_LINEAGE_SCHEMA.fieldNames())
 
-    for lo in range(0, len(todo), units_per_commit):
-        group = todo[lo:lo + units_per_commit]
-        sel = pages.where(
-            unit_key.isin([b * _PR_ENC + p for b, p in group]))
-        parsed = pipeline.parse_pages_exploded(sel.drop("bucket", "prange"))
-        out = parsed.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"),
-        ).withColumn("prange", _prange(pages_per_range))
-        out.write.mode("overwrite").partitionBy("bucket", "prange") \
-            .parquet(_pages_path(base))
+    def build(group):
+        sel = pages.where(_in_units(keys, group)).drop(*keys)
+        return pipeline.parse_pages_exploded(sel) \
+            .withColumn("bucket", _bucket(n_buckets)) \
+            .withColumn("prange", _prange(pages_per_range))
 
-        try:
-            counts = (
-                spark.read.parquet(_pages_path(base))
-                .where(unit_key.isin([b * _PR_ENC + p for b, p in group]))
-                .groupBy("bucket", "prange")
-                .agg(
-                    F.count("page_no").alias("n_pages"),
-                    F.sum((F.col("status") == "failed").cast("long"))
-                    .alias("n_failed_pages"),
-                    F.sum((F.col("status") == "fallback").cast("long"))
-                    .alias("n_fallback_pages"),
-                )
-            )
-        except AnalysisException:
-            counts = spark.createDataFrame(
-                [], "bucket int, prange int, n_pages long, "
-                    "n_failed_pages long, n_fallback_pages long")
-        group_df = spark.createDataFrame(
-            [(int(b), int(p)) for b, p in group], "bucket int, prange int")
-        lineage = (
-            group_df.join(counts, ["bucket", "prange"], "left")
-            .select(
-                "bucket", "prange",
-                F.lit(run_id).alias("run_id"),
-                F.coalesce("n_pages", F.lit(0)).cast("long").alias("n_pages"),
-                F.coalesce("n_failed_pages", F.lit(0)).cast("long")
-                .alias("n_failed_pages"),
-                F.coalesce("n_fallback_pages", F.lit(0)).cast("long")
-                .alias("n_fallback_pages"),
-                F.lit(time.time()).alias("completed_at_unix"),
-            )
-        )
-        lineage.write.mode("append").parquet(_page_lineage_path(base))
-
+    _commit_groups(
+        spark, PAGE_LINEAGE_SCHEMA, _pages_path(base), _page_lineage_path(base),
+        todo, units_per_commit, run_id, build, [
+            F.count("page_no"),
+            F.sum((F.col("status") == "failed").cast("long")),
+            F.sum((F.col("status") == "fallback").cast("long")),
+        ])
     return {
         "run_id": run_id,
         "processed_units": len(todo),
@@ -443,16 +429,7 @@ def assemble_from_page_checkpoint(spark: SparkSession, base: str) -> DataFrame:
 def page_metrics_summary(spark: SparkSession, base: str) -> DataFrame:
     """Run-level metrics rollup from the PAGE lineage table — the
     page-granular runner's analog of :func:`metrics_summary`."""
-    return (
-        read_page_lineage(spark, base)
-        .groupBy("run_id")
-        .agg(
-            F.count("*").alias("n_units"),
-            F.sum("n_pages").alias("n_pages"),
-            F.sum("n_failed_pages").alias("n_failed_pages"),
-            F.sum("n_fallback_pages").alias("n_fallback_pages"),
-        )
-    )
+    return _rollup(read_page_lineage(spark, base), "n_units")
 
 
 def read_lineage(spark: SparkSession, base: str) -> DataFrame:
@@ -462,15 +439,5 @@ def read_lineage(spark: SparkSession, base: str) -> DataFrame:
 def metrics_summary(spark: SparkSession, base: str) -> DataFrame:
     """Run-level metrics rollup from the lineage table (A4/A5 analog:
     per-run counters the reference keeps in task stats,
-    /root/reference/app/utils/executor/stats.py:22-41)."""
-    return (
-        read_lineage(spark, base)
-        .groupBy("run_id")
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_spans").alias("n_spans"),
-            F.sum("n_failed_pages").alias("n_failed_pages"),
-            F.sum("n_fallback_pages").alias("n_fallback_pages"),
-        )
-    )
+    ``app/utils/executor/stats.py:22-41``)."""
+    return _rollup(read_lineage(spark, base), "n_buckets")

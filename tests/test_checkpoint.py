@@ -2,12 +2,15 @@
 recomputing completed partitions, and the resumed output equals a
 single-shot run's output exactly."""
 
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from dots_ocr_spark import checkpoint, pipeline
 
+REPO = Path(__file__).resolve().parents[1]
 N_DOCS = 300
 N_BUCKETS = 16
 
@@ -200,7 +203,7 @@ def test_metrics_oracle_resolves_after_query_process_exits():
         ".collect(); spark.stop()"
     )
     subprocess.run([sys.executable, "-c", code], check=True,
-                   capture_output=True, text=True, cwd="/root/repo")
+                   capture_output=True, text=True, cwd=REPO)
 
     from dots_ocr_spark import queries as Q
 
@@ -245,3 +248,40 @@ def test_bucket_col_layout_mismatch_fails_fast(spark, docs, tmp_path):
             spark, spark.read.parquet(src), base, n_buckets=N_BUCKETS,
             buckets_per_commit=4, run_id="finer", bucket_col="bucket")
     assert checkpoint.completed_buckets(spark, base) == set()
+
+
+# both runners: (runner, lineage dir, lineage schema)
+RUNNERS = {
+    "bucket": (checkpoint.run_extraction, "_lineage",
+               checkpoint.LINEAGE_SCHEMA),
+    "paged": (checkpoint.run_extraction_paged, "_page_lineage",
+              checkpoint.PAGE_LINEAGE_SCHEMA),
+}
+
+
+@pytest.mark.parametrize("grain", sorted(RUNNERS))
+def test_unreadable_lineage_fails_loudly(spark, tmp_path, grain):
+    """A lineage table that exists but cannot be read must stop the
+    resume scan: treating it as "nothing committed" would silently
+    recompute every unit. Only a missing lineage dir means a fresh run."""
+    run, lineage_dir, _ = RUNNERS[grain]
+    few = pipeline.generate_input(spark, 6, partitions=1)
+    base = tmp_path / "ckpt"
+    run(spark, few, str(base), n_buckets=2, run_id="ok")
+    (base / lineage_dir / "corrupt.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="corrupt.parquet"):
+        run(spark, few, str(base), n_buckets=2, run_id="again")
+
+
+@pytest.mark.parametrize("grain", sorted(RUNNERS))
+def test_lineage_on_disk_format_matches_schema(spark, tmp_path, grain):
+    """The lineage parquet, read WITHOUT an explicit schema, has exactly
+    the declared schema's field names and types: every other read goes
+    through the schema, which would turn a renamed column into nulls."""
+    run, lineage_dir, schema = RUNNERS[grain]
+    base = tmp_path / "ckpt"
+    run(spark, pipeline.generate_input(spark, 6, partitions=1), str(base),
+        n_buckets=2, run_id="fmt")
+    got = spark.read.parquet(str(base / lineage_dir)).schema
+    assert [(f.name, f.dataType) for f in got] == \
+        [(f.name, f.dataType) for f in schema]

@@ -4,6 +4,7 @@ document — zero committed pages recomputed — and the assembled output
 must equal a single-shot extraction exactly."""
 
 import itertools
+from pathlib import Path
 
 import pytest
 
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 from dots_ocr_spark import checkpoint, pipeline, schemas
 from dots_ocr_spark.fixtures import generate_doc
 
+REPO = Path(__file__).resolve().parents[1]
 N_BUCKETS = 4
 PAGES_PER_RANGE = 8
 GIANT_PAGES = 64
@@ -178,7 +180,7 @@ def test_job_cli_page_checkpoint_end_to_end(tmp_path):
            "--pages-per-range", "4", "--units-per-commit", "8"]
     r1 = json.loads(subprocess.run(
         cmd, capture_output=True, text=True, check=True,
-        cwd="/root/repo").stdout.strip().splitlines()[-1])
+        cwd=REPO).stdout.strip().splitlines()[-1])
     assert r1["processed_units"] > 0 and r1["skipped_units"] == 0
     assert r1["metrics"][0]["n_pages"] > 0
 
@@ -191,7 +193,7 @@ def test_job_cli_page_checkpoint_end_to_end(tmp_path):
 
     r2 = json.loads(subprocess.run(
         cmd, capture_output=True, text=True, check=True,
-        cwd="/root/repo").stdout.strip().splitlines()[-1])
+        cwd=REPO).stdout.strip().splitlines()[-1])
     assert r2["processed_units"] == 0
     assert r2["skipped_units"] == r1["processed_units"]
     docs2 = duckdb.sql(

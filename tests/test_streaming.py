@@ -3,12 +3,16 @@ same results as the batch pipeline, process newly-arriving files
 incrementally, and not reprocess already-seen files across restarts
 (file-source checkpoint = the streaming resume story)."""
 
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from dots_ocr_spark import pipeline
 from dots_ocr_spark.streaming import stream_extract
+
+REPO = Path(__file__).resolve().parents[1]
 
 N1, N2 = 120, 80
 
@@ -377,16 +381,16 @@ def test_stream_cli_extract_drains_and_resumes(tmp_path):
         p = subprocess.run(
             [sys.executable, "jobs/run_stream.py", "extract",
              "--input", land, "--output", out, "--timeout", "240"],
-            capture_output=True, text=True, check=True, cwd="/root/repo")
+            capture_output=True, text=True, check=True, cwd=REPO)
         return json.loads(p.stdout.strip().splitlines()[-1])
 
     subprocess.run([sys.executable, "-c", gen, "0", "40", land],
-                   check=True, capture_output=True, cwd="/root/repo")
+                   check=True, capture_output=True, cwd=REPO)
     r1 = run_cli()
     assert r1["output_rows"] == 40
     time.sleep(1.1)
     subprocess.run([sys.executable, "-c", gen, "40", "60", land],
-                   check=True, capture_output=True, cwd="/root/repo")
+                   check=True, capture_output=True, cwd=REPO)
     r2 = run_cli()
     assert r2["output_rows"] == 60
 
